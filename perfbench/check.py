@@ -30,11 +30,6 @@ def summarize(df) -> Summary:
     return Summary(int(r["rows"]), int(r["urls"]), int(r["digest"] or 0))
 
 
-def combine(a: Summary, b: Summary) -> Summary:
-    """Summary of the union of two url-disjoint outputs."""
-    return Summary(a.rows + b.rows, a.urls + b.urls, a.digest ^ b.digest)
-
-
 def diff_urls(expected, got) -> set[str]:
     """Urls missing from either side, duplicated, or with different text."""
     from pyspark.sql import functions as F

@@ -13,19 +13,20 @@ import random
 
 WORKLOADS = ("crawl_extract", "hostile_nesting", "checkpoint_resume")
 
-# docs per workload; sized so one 2-slot pass is a few seconds and the
-# 1-slot leg still fits two or more passes in its share of a run
-N_DOCS = {"crawl_extract": 2000, "hostile_nesting": 2000,
-          "checkpoint_resume": 1500}
+# docs per workload; sized so a 2-slot pass is 2-3 s and a run's five
+# passes, checkpoint cycle and two set-ups fit about a minute
+N_DOCS = {"crawl_extract": 1600, "hostile_nesting": 1600,
+          "checkpoint_resume": 1200}
 
 # staged input files = tasks per pass (one task per file, see
-# run.spark_conf): 4 per slot at 2 slots, the same 8 at 1 slot
-PARTITIONS = 8
+# run.spark_conf): 2 per slot at 2 slots, the same 4 at 1 slot. Python
+# worker start-up is paid per task, so fewer tasks cost less fixed time
+PARTITIONS = 4
 
 # hostile_nesting composition: a fixed count per (depth, shape) cell so
 # the cost mix does not change with the seed; the seed picks which docs
 # are replaced, the exact depth (base + up to base/32) and the words.
-# The 6 pages cost about half the kernel time of the 2000 crawl docs.
+# The 6 pages cost about as much kernel time as the 1600 crawl docs.
 HOSTILE_DEPTHS = (1000, 2000, 4000)
 HOSTILE_SHAPES = ("stray", "text")
 HOSTILE_PER_CELL = 1
@@ -69,8 +70,8 @@ def hostile_page(depth: int, shape: str, rng: random.Random) -> bytes:
 
 def hostile_plan(n_docs: int, seed: int) -> list[tuple[int, int, str]]:
     """(doc index, depth, shape) for every replaced doc, sorted by index.
-    Cell k always lands in staged file k (doc i is in file i % PARTITIONS),
-    so every seed gives every task the same hostile load."""
+    Cell k always lands in staged file k % PARTITIONS (doc i is in file
+    i % PARTITIONS), so every seed gives every task the same hostile load."""
     rng = random.Random(f"hostile-plan-{seed}")
     cells = [(base, shape) for base in HOSTILE_DEPTHS
              for shape in HOSTILE_SHAPES for _ in range(HOSTILE_PER_CELL)]

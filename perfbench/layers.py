@@ -139,32 +139,36 @@ def _wrapped_lineage(tracer):
 
 
 def _lineage(run, docs) -> None:
+    """The run's checkpoint cycle (Run.cycle) with spans around the
+    lineage calls, and resume_filter's anti-join counted between the
+    fresh and the resumed run."""
     from dxnn_ocr_cpp_spark.lineage import CheckpointedRun
 
-    docs90 = inputs.resume_split(docs)
-    root = run.dir / "T-lineage"
     tr = run.tracer
     mark = len(tr.spans)
-    with _wrapped_lineage(tr):
-        run.timed("lineage-fresh", lambda: run.checkpointed(docs90, root))
-        fresh = tr.spans[mark:]
-        mark = len(tr.spans)
-        filt = CheckpointedRun(run.spark, str(root)).resume_filter(docs, "blocks")
-        wall, _, _ = run.timed("lineage-filter", filt.count)
-        out = run.timed("lineage-resume", lambda: run.checkpointed(docs, root))[2]
-    run.check("lineage resume", out)
+    found = {}
 
-    def span_s(spans, name, stage):
-        return sum(s["end"] - s["start"] for s in spans
+    def count_filter(root):
+        found["fresh"] = tr.spans[mark:]
+        # resume_filter is lazy: its cost is that of counting its output
+        filt = CheckpointedRun(run.spark, str(root)).resume_filter(docs, "blocks")
+        found["filter_s"] = run.timed("lineage-filter", filt.count)[0]
+
+    rec = run.new_rec()
+    with _wrapped_lineage(tr):
+        run.cycle("lineage", docs, rec, after_fresh=count_filter)
+
+    def span_s(name, stage):
+        return sum(s["end"] - s["start"] for s in found["fresh"]
                    if s["name"] == name and s.get("stage") == stage)
 
-    n, n90 = run.n, run.ref90.rows
+    n = run.n
     run.layer.update({
-        "lineage.blocks_stage_s": span_s(fresh, "lineage.run_incremental_stage", "blocks"),
-        "lineage.extracted_stage_s": span_s(fresh, "lineage.run_stage", "extracted"),
-        "lineage.resume_filter_s": wall,
-        "lineage.blocks_bytes_per_doc": dir_bytes(root / "blocks" / "data") / n,
-        "lineage.extracted_bytes_per_doc": dir_bytes(root / "extracted" / "data") / n,
+        "lineage.blocks_stage_s": span_s("lineage.run_incremental_stage", "blocks"),
+        "lineage.extracted_stage_s": span_s("lineage.run_stage", "extracted"),
+        "lineage.resume_filter_s": found["filter_s"],
+        "lineage.blocks_bytes_per_doc": rec["bytes"]["blocks"] / n,
+        "lineage.extracted_bytes_per_doc": rec["bytes"]["extracted"] / n,
     })
 
 
@@ -269,7 +273,7 @@ def metrics(run, log_dir) -> dict[str, float]:
         "segment.udf_rows": int(udf[f"{ARROW_UDF}/number of output rows"]),
     })
 
-    fresh, resume = g["lineage-fresh"], g["lineage-resume"]
+    fresh, resume = g["lineage"], g["lineage-resume"]
     m.update({
         "lineage.spark_jobs_fresh": fresh["jobs"],
         "lineage.spark_jobs_resume": resume["jobs"],

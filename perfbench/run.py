@@ -1,14 +1,16 @@
 """Extraction benchmark.
 
     python3 perfbench/run.py --workload crawl_extract --seed 1 \
-        --seconds 20 --trace 0
+        --seconds 10 --trace 0
 
 Runs one workload (inputs.WORKLOADS, see NOTES.md) through the public
 API in one process, closed loop: each timed pass is one job over the
 whole staged input and the next starts when it ends. Passes alternate
 between the local[2] session's two task slots and one slot (the other
 held by a sleeping task), so the 1->2 scaling ratio compares passes
-measured back to back. Every output is checked (check.py).
+measured back to back. Then one checkpoint cycle: extract_checkpointed
+over 90% of the urls, resumed over 100%. Every output is checked
+(check.py).
 
 Prints one `workload/metric value unit` line per metric, then, as the
 last line, one JSON object {"correct", "attempted", "failed",
@@ -41,7 +43,7 @@ if str(ROOT) not in sys.path:
     sys.path.insert(0, str(ROOT))
 
 from perfbench import inputs  # noqa: E402
-from perfbench.check import (Checker, combine, reference_texts,  # noqa: E402
+from perfbench.check import (Checker, reference_texts,  # noqa: E402
                              summarize, texts_for)
 from perfbench.probes import (RssSampler, Tracer, tree_cpu_s,  # noqa: E402
                               tree_pids)
@@ -60,8 +62,8 @@ END_TO_END = {
 
 SLOTS = 2           # task slots of the session; 1-slot passes hold one
 DRIVER_CPUS = 1     # this process and the driver JVM beside the task slots
-MIN_ROUNDS = 3      # rounds of timed passes, even past --seconds
-RESUME_REPS = 2     # resume timings per run on the extract() workloads
+MIN_ROUNDS = 2      # rounds of timed passes, even past --seconds
+FIRST_PASSES = MIN_ROUNDS + 1   # 2-slot passes every run has (cpu_ms_per_doc)
 DEADLINE_S = 170    # the whole run, set-up and checks included
 
 
@@ -77,7 +79,6 @@ def pinned_env() -> dict:
 
 def spark_conf(event_log: Path | None) -> dict:
     conf = {
-        "spark.driver.memory": "2g",
         "spark.ui.showConsoleProgress": "false",
         "spark.local.dir": str(WORK / "spark-local"),
         "spark.sql.warehouse.dir": str(WORK / "warehouse"),
@@ -249,6 +250,20 @@ class Run:
         from py4j.protocol import Py4JJavaError
 
         sc = self.spark.sparkContext
+        sched = sc._jsc.sc().taskScheduler()
+
+        def running() -> int:
+            # the scheduler's own count: the status tracker's lags by
+            # seconds (it is refreshed on a timer, not per task)
+            opt = sched.runningTasksByExecutors().get("driver")
+            return opt.get() if opt.isDefined() else 0
+
+        def wait_until(cond, what):
+            deadline = time.monotonic() + 60
+            while not cond():
+                if time.monotonic() > deadline:
+                    raise RuntimeError(f"the slot-holding task {what}")
+                time.sleep(0.01)
 
         def hold():
             sc.setJobGroup("hold-slot", "hold-slot", interruptOnCancel=True)
@@ -260,17 +275,13 @@ class Run:
 
         thread = threading.Thread(target=hold, daemon=True)
         thread.start()
-        st, deadline = sc.statusTracker(), time.monotonic() + 60
-        while not any(getattr(st.getStageInfo(s), "numActiveTasks", 0)
-                      for s in st.getActiveStageIds()):
-            if time.monotonic() > deadline:
-                raise RuntimeError("the slot-holding task never started")
-            time.sleep(0.005)
+        wait_until(lambda: running() == 1, "never started")
         try:
             yield
         finally:
             sc.cancelJobGroup("hold-slot")
             thread.join(timeout=60)
+            wait_until(lambda: running() == 0, "was never released")
 
     def setup(self, event_log: Path | None = None, stage: bool = False):
         """One set-up sample: build_session and a discarded warm-up pass
@@ -301,24 +312,35 @@ class Run:
             self.set_reference(self.dir / "reference", docs)
         return docs
 
-    def measure(self, leg: str, docs, slot_counts, seconds: float) -> dict:
+    @staticmethod
+    def new_rec() -> dict:
+        return {"wall": [], "rate": [], "cpu_per_doc": [], "rss_mb": [],
+                "resume": [], "bytes": {}}
+
+    def measure(self, leg: str, docs, slot_counts, seconds: float) -> None:
         """Rounds of one timed pass per slot count, back to back, until
-        `seconds` are used and at least MIN_ROUNDS ran."""
-        recs = {n: {"wall": [], "rate": [], "cpu_per_doc": [], "rss_mb": [],
-                    "resume": []} for n in slot_counts}
+        `seconds` are used and at least MIN_ROUNDS ran, then a closing
+        pass at the first slot count, so the legs sit symmetric in time
+        (2 1 2 1 2). On checkpoint_resume a pass is the fresh run of a
+        checkpoint cycle."""
+        recs = self.legs[leg] = {n: self.new_rec() for n in slot_counts}
+
+        def one_pass(n):
+            label = f"{leg}-s{n}-pass{len(recs[n]['wall'])}"
+            if self.ckpt:
+                self.cycle(label, docs, recs[n], slots=n, resume=False)
+            else:
+                self.pass_extract(label, n, docs, recs[n])
+
         t0 = time.perf_counter()
         r = 0
         while r < MIN_ROUNDS or time.perf_counter() - t0 < seconds:
             for n in slot_counts:
-                if self.ckpt:
-                    self.pass_checkpointed(f"{leg}-s{n}-pass{r}", n, docs, recs[n])
-                else:
-                    self.pass_extract(f"{leg}-s{n}-pass{r}", n, docs, recs[n])
+                one_pass(n)
             r += 1
+        one_pass(slot_counts[0])
         for n, rec in recs.items():
             self.note(f"{leg} {n}-slot passes " + " ".join(f"{w:.2f}" for w in rec["wall"]))
-        self.legs[leg] = recs
-        return recs
 
     def record(self, rec: dict, docs: int, wall: float, cpu: float) -> None:
         rec["wall"].append(wall)
@@ -334,7 +356,6 @@ class Run:
         wall, cpu, _ = self.timed(label, lambda: self.extract_to(docs, out),
                                   one_slot=slots == 1)
         self.record(rec, self.n, wall, cpu)
-        rec["bytes"] = dir_bytes(out)
         if self.ref is None:
             self.set_reference(out, docs)
             return
@@ -344,44 +365,32 @@ class Run:
             self.check_sample(f"{label} sample", out_df)
         shutil.rmtree(out, ignore_errors=True)
 
-    def pass_checkpointed(self, label: str, slots: int, docs, rec: dict) -> None:
-        """Fresh extract_checkpointed over the 90% split (docs/s); at 2
-        slots also the resumed run over 100% on the same root
-        (resume_s)."""
+    def cycle(self, label: str, docs, rec: dict, slots: int = SLOTS,
+              resume: bool = True, after_fresh=None) -> None:
+        """One checkpoint cycle: a fresh extract_checkpointed over the
+        90% split (what a crashed run had finished), then the resumed
+        run over 100% on the same root. Records the fresh pass, the
+        resume wall, and the bytes of the blocks and extracted
+        checkpoints (_lineage, which carries a random run id, excluded).
+        `after_fresh(root)` runs between the two."""
         root = self.dir / label
-        n90 = self.ref90.rows
         wall, cpu, out = self.timed(
             label, lambda: self.checkpointed(inputs.resume_split(docs), root),
             one_slot=slots == 1)
-        self.record(rec, n90, wall, cpu)
+        self.record(rec, self.ref90.rows, wall, cpu)
         self.check(f"{label} fresh", out, full=False)
-        if slots == SLOTS:
+        if after_fresh is not None:
+            after_fresh(root)
+        if resume:
             wall, _, out = self.timed(f"{label}-resume",
                                       lambda: self.checkpointed(docs, root))
             rec["resume"].append(wall)
             self.check(f"{label} resume", out)
-            rec["bytes"] = sum(dir_bytes(root / s / "data")
-                               for s in ("blocks", "extracted"))
-            if len(rec["wall"]) == 1:
-                self.check_sample(f"{label} sample", out)
+            self.check_sample(f"{label} resume sample", out)
+            rec["bytes"].update({s: dir_bytes(root / s / "data")
+                                 for s in ("blocks", "extracted")})
+            self.note(f"{label} fresh {rec['wall'][-1]:.2f}s, resume {wall:.2f}s")
         shutil.rmtree(root, ignore_errors=True)
-
-    def resume_extract(self, docs, rec: dict) -> None:
-        """Recovery after a crash at 90%: extract() over the urls missing
-        from a sink that holds the other 90%, written beside it."""
-        from dxnn_ocr_cpp_spark.pipeline import extract
-
-        done = inputs.resume_split(self.read(self.ref_dir))
-        inc = self.dir / "resume"
-        for r in range(RESUME_REPS):
-            def job():
-                todo = docs.join(done.select("url"), "url", "left_anti")
-                with self.tracer.span("pipeline.extract"):
-                    extract(todo).write.mode("overwrite").parquet(str(inc))
-            wall, _, _ = self.timed(f"resume{r}", job)
-            rec["resume"].append(wall)
-            got = combine(self.ref90, summarize(self.read(inc)))
-            self.checker.expect_summary(f"resume {r}", self.ref, got)
 
     # --- the run --------------------------------------------------------------
 
@@ -390,11 +399,11 @@ class Run:
         docs = self.setup(stage=True)
         if self.traced:
             return self.run_traced(docs)
-        hi = self.measure("A", docs, (SLOTS, 1), self.seconds)[SLOTS]
+        self.measure("A", docs, (SLOTS, 1), self.seconds)
+        self.legs["C"] = self.new_rec()
+        self.cycle("C", docs, self.legs["C"])
         self.stop()
-        docs = self.setup()          # the second set-up sample
-        if not self.ckpt:
-            self.resume_extract(docs, hi)
+        self.setup()                 # the second set-up sample
         self.stop()
         return self.end_to_end()
 
@@ -416,16 +425,19 @@ class Run:
         return layers.metrics(self, log)
 
     def end_to_end(self) -> dict[str, float]:
-        hi, lo = self.legs["A"][SLOTS], self.legs["A"][1]
+        hi, lo, ck = self.legs["A"][SLOTS], self.legs["A"][1], self.legs["C"]
         docs_per_s = statistics.median(hi["rate"])
         per_slot = statistics.median(lo["rate"])
         return {
             "docs_per_s": docs_per_s,
             "docs_per_s_1slot": per_slot,
             "scaling_eff_1_2": docs_per_s / (SLOTS * per_slot),
-            "cpu_ms_per_doc": 1000 * statistics.median(hi["cpu_per_doc"]),
-            "resume_s": statistics.median(hi["resume"]),
-            "ckpt_bytes_per_doc": hi["bytes"] / self.n,
+            # the same passes in every run, so every run samples the
+            # JVM's JIT at the same age
+            "cpu_ms_per_doc": 1000 * statistics.median(
+                hi["cpu_per_doc"][:FIRST_PASSES]),
+            "resume_s": ck["resume"][0],
+            "ckpt_bytes_per_doc": sum(ck["bytes"].values()) / self.n,
             "peak_rss_mb": statistics.median(hi["rss_mb"]),
             "setup_s": statistics.median(self.setups),
         }

@@ -75,7 +75,7 @@ def test_hostile_pages_have_stated_depths_and_shapes():
         assert r["index"] not in inputs.kernel_indices(n)
     # the same hostile load per staged file for every seed
     assert sorted(r["index"] % inputs.PARTITIONS for r in rows) == \
-        list(range(len(rows)))
+        sorted(k % inputs.PARTITIONS for k in range(len(rows)))
     assert cells == {(b, s): inputs.HOSTILE_PER_CELL
                      for b in inputs.HOSTILE_DEPTHS for s in inputs.HOSTILE_SHAPES}
 
@@ -134,10 +134,3 @@ def test_checker_flags_one_corrupted_and_one_dropped_row(spark):
     c.expect_summary("pass", want, check.summarize(ref), ref, ref)
     assert c.failed == set() and c.fail_frac == 0
 
-
-def test_combine_is_the_summary_of_the_union(spark):
-    rows = [(f"u{i}", f"t{i}") for i in range(30)]
-    whole = check.summarize(spark.createDataFrame(rows, "url string, text string"))
-    a = check.summarize(spark.createDataFrame(rows[:21], "url string, text string"))
-    b = check.summarize(spark.createDataFrame(rows[21:], "url string, text string"))
-    assert check.combine(a, b) == whole
