@@ -20,13 +20,15 @@ partitioning/parallelism):
 Block model (the TextBox analog, /root/reference/include/common/types.hpp:13-53):
   block_id   0-based emission ordinal (contour index analog)
   tag        the block-level tag owning the text run
-  tag_path   'html/body/div[1]/p[3]'-style path with 1-based sibling idx
+  boiler     True if the block context sits at or under a boiler tag
+             (config.boiler_ancestors) — inherited down the open-element
+             stack, so it costs one lookup per element
   depth      open-element depth at block start
   pos        global start-tag counter at block start — the document-order
              sort key (analog of (y, x) reading order,
              /root/reference/src/pipeline/ocr_pipeline.cpp:180-200)
   text_raw   raw accumulated character data (un-normalized)
-  n_text_chars / n_link_chars / n_tags   stage-2 features
+  n_text_chars / n_link_chars   stage-2 features
 """
 
 from __future__ import annotations
@@ -35,6 +37,8 @@ import codecs
 import re
 from dataclasses import dataclass
 from html.parser import HTMLParser
+
+from dxnn_ocr_cpp_spark.config import DEFAULT_CONFIG
 
 # --- charset sniffing (input normalization, analog of doc preprocessing,
 # /root/reference/src/pipeline/document_preprocessing.cpp:94-175) ---
@@ -117,13 +121,12 @@ HEAD_TAGS = frozenset(
 class Block:
     block_id: int
     tag: str
-    tag_path: str
+    boiler: bool
     depth: int
     pos: int
     text_raw: str
     n_text_chars: int
     n_link_chars: int
-    n_tags: int
 
 
 @dataclass
@@ -136,11 +139,16 @@ class SegmentResult:
 
 
 class _Segmenter(HTMLParser):
-    def __init__(self, max_candidates: int):
+    def __init__(self, max_candidates: int, boiler_tags):
         super().__init__(convert_charrefs=True)
         self.max_candidates = max_candidates
-        # open-element stack: (path, child_counter_dict, tag)
-        self.stack: list = [("", {}, "")]
+        self.boiler_tags = frozenset(boiler_tags)
+        # open-element stack: (tag, boiler, block_i). boiler: this
+        # element or an ancestor is a boiler tag; block_i: stack index
+        # of the nearest block element at or above it (0: none)
+        self.stack: list = [("", False, 0)]
+        # tag -> number of open elements with that tag
+        self.open: dict = {}
         self.skip_depth = 0
         self.link_depth = 0
         self.pos = 0
@@ -149,13 +157,12 @@ class _Segmenter(HTMLParser):
         # current run state
         self._parts: list = []
         self._link_chars = 0
-        self._n_tags = 0
         self._ctx_tag = "body"
-        self._ctx_path = ""
+        self._ctx_boiler = False
         self._ctx_depth = 0
         self._ctx_pos = 0
 
-    # -- path bookkeeping --
+    # -- open-element stack --
     # skip_depth/link_depth are INVARIANTS of the open-element stack
     # (number of open SKIP_TAGS / <a> elements), maintained exclusively
     # by _push/_pop. Ad-hoc counting at the handler level leaked on
@@ -163,50 +170,53 @@ class _Segmenter(HTMLParser):
     # — browsers imply it), and a leaked skip_depth silently dropped
     # EVERY remaining block; an unclosed <a> popped by an ancestor's
     # end tag left link_depth high and link-density killed all later
-    # blocks.
-    def _push(self, tag: str) -> str:
-        parent_path, counters, _ = self.stack[-1]
-        c = counters.get(tag, 0) + 1
-        counters[tag] = c
-        path = f"{parent_path}/{tag}[{c}]" if parent_path else f"{tag}[{c}]"
-        self.stack.append((path, {}, tag))
+    # blocks. Both cost amortized O(1) per element (no stack scan
+    # beyond the elements a close pops), so hostile nesting stays
+    # linear in the input.
+    def _push(self, tag: str) -> None:
+        stack = self.stack
+        _, boiler, block_i = stack[-1]
+        stack.append((tag, boiler or tag in self.boiler_tags,
+                      len(stack) if tag in BLOCK_TAGS else block_i))
+        self.open[tag] = self.open.get(tag, 0) + 1
         if tag in SKIP_TAGS:
             self.skip_depth += 1
         elif tag == "a":
             self.link_depth += 1
-        return path
 
     def _pop(self, tag: str) -> None:
         # pop to the nearest matching open element; ignore stray
         # closers; reconcile counters for every implicitly-closed
         # element above the match
         stack = self.stack
-        if stack[-1][2] == tag:  # well-formed close (the common case)
+        if stack[-1][0] == tag:  # well-formed close (the common case)
+            self.open[tag] -= 1
             if tag in SKIP_TAGS:
                 self.skip_depth -= 1
             elif tag == "a":
                 self.link_depth -= 1
             del stack[-1]
             return
-        for i in range(len(stack) - 1, 0, -1):
-            if stack[i][2] == tag:
-                for j in range(i, len(stack)):
-                    t = stack[j][2]
-                    if t in SKIP_TAGS:
-                        self.skip_depth -= 1
-                    elif t == "a":
-                        self.link_depth -= 1
-                del stack[i:]
-                return
+        if not self.open.get(tag):
+            return  # stray closer
+        i = len(stack) - 2
+        while stack[i][0] != tag:
+            i -= 1
+        for t, _, _ in stack[i:]:
+            self.open[t] -= 1
+            if t in SKIP_TAGS:
+                self.skip_depth -= 1
+            elif t == "a":
+                self.link_depth -= 1
+        del stack[i:]
 
     # -- run/block bookkeeping --
     def _flush(self) -> None:
         if not self._parts:
             # nothing accumulated: no block can emit, just reset the
-            # per-run feature counters (identical end state to the
-            # full path on empty text)
+            # link counter (identical end state to the full path on
+            # empty text)
             self._link_chars = 0
-            self._n_tags = 0
             return
         text = "".join(self._parts)
         if text and not text.isspace():
@@ -215,7 +225,7 @@ class _Segmenter(HTMLParser):
                 self.blocks.append(Block(
                     block_id=len(self.blocks),
                     tag=self._ctx_tag,
-                    tag_path=self._ctx_path,
+                    boiler=self._ctx_boiler,
                     depth=self._ctx_depth,
                     pos=self._ctx_pos,
                     text_raw=text,
@@ -223,31 +233,26 @@ class _Segmenter(HTMLParser):
                     # same whitespace definition as str.isspace()
                     n_text_chars=sum(map(len, text.split())),
                     n_link_chars=self._link_chars,
-                    n_tags=self._n_tags,
                 ))
         self._parts = []
         self._link_chars = 0
-        self._n_tags = 0
 
-    def _new_ctx(self, tag: str, path: str) -> None:
+    def _new_ctx(self, tag: str) -> None:
         self._ctx_tag = tag
-        self._ctx_path = path
+        self._ctx_boiler = self.stack[-1][1]
         self._ctx_depth = len(self.stack) - 1
         self._ctx_pos = self.pos
 
     def _reinherit_ctx(self) -> None:
         """After closing a block element, text that follows (the 'tail')
         belongs to the nearest enclosing block element still open."""
-        stack = self.stack
-        for i in range(len(stack) - 1, 0, -1):
-            tag = stack[i][2]
-            if tag in BLOCK_TAGS:
-                self._ctx_tag = tag
-                self._ctx_path = stack[i][0]
-                self._ctx_depth = i
-                self._ctx_pos = self.pos
-                return
-        self._new_ctx("body", self.stack[-1][0])
+        block_i = self.stack[-1][2]
+        if not block_i:
+            self._new_ctx("body")
+            return
+        self._ctx_tag, self._ctx_boiler, _ = self.stack[block_i]
+        self._ctx_depth = block_i
+        self._ctx_pos = self.pos
 
     # -- HTMLParser hooks --
     def handle_starttag(self, tag, attrs):
@@ -261,15 +266,14 @@ class _Segmenter(HTMLParser):
         # Only when head is the SOLE open skip element — content nested
         # in template/svg/iframe stays dropped.
         if (self.skip_depth == 1 and tag not in HEAD_TAGS
-                and any(e[2] == "head" for e in self.stack)):
+                and self.open.get("head")):
             self._pop("head")
-        path = self._push(tag)  # maintains skip_depth/link_depth
+        self._push(tag)  # maintains skip_depth/link_depth
         if self.skip_depth:
             return
-        self._n_tags += 1
         if tag in BLOCK_TAGS:
             self._flush()
-            self._new_ctx(tag, path)
+            self._new_ctx(tag)
 
     def handle_startendtag(self, tag, attrs):
         # <x/> — treat exactly like a void occurrence
@@ -294,7 +298,7 @@ class _Segmenter(HTMLParser):
     def handle_data(self, data):
         # bare text directly inside <head> implies </head> too (HTML5)
         if (data and self.skip_depth == 1 and not data.isspace()
-                and any(e[2] == "head" for e in self.stack)):
+                and self.open.get("head")):
             self._pop("head")
         if self.skip_depth or not data:
             return
@@ -525,12 +529,15 @@ def segment_html(raw: bytes | None,
                  max_candidates: int = 1500,
                  max_html_bytes: int = 20 << 20,
                  sniff_bytes: int = 2048,
-                 engine: str = "fast") -> SegmentResult:
+                 engine: str = "fast",
+                 boiler_tags: tuple = DEFAULT_CONFIG.boiler_ancestors
+                 ) -> SegmentResult:
     """One document -> candidate blocks. Never raises (F8/F9 analog:
     empty/broken input still yields a result row).
 
     engine: "fast" (regex tokenizer, production default) or "ref"
     (stdlib html.parser, the reference model both engines must match).
+    boiler_tags: tags whose subtree marks a block `boiler`.
     """
     if raw is None:
         return SegmentResult([], 0, False, "null", False)
@@ -538,7 +545,7 @@ def segment_html(raw: bytes | None,
     if oversized:
         raw = raw[:max_html_bytes]  # truncate guard-rail (F7/P6)
     text, charset = decode_html(raw, sniff_bytes)
-    seg = _Segmenter(max_candidates)
+    seg = _Segmenter(max_candidates, boiler_tags)
     try:
         if engine == "fast":
             _fast_feed(seg, text)

@@ -15,50 +15,23 @@ does) — the backpressure analog of the reference's bounded queues
 
 from __future__ import annotations
 
-import functools
-
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from dxnn_ocr_cpp_spark.config import DEFAULT_CONFIG, ExtractionConfig
 from dxnn_ocr_cpp_spark.htmlseg import normalize_text, segment_html
-from dxnn_ocr_cpp_spark.schemas import SEGMENT_RESULT, SEGMENT_RESULT_SLIM
-
-
-@functools.lru_cache(maxsize=8)
-def _boiler_re(boiler_ancestors: tuple):
-    """Compiled form of the boiler-ancestor predicate — one C-level
-    scan per block instead of a per-segment split/membership loop
-    (profiled at ~10% of the whole kernel on the bench corpus).
-    Same pattern shape as score._boiler_path_regex: a path segment is
-    'tag[n]', so a boiler tag is always followed by '[' and preceded
-    by start-of-string or '/'."""
-    import re
-    alts = "|".join(re.escape(t) for t in boiler_ancestors)
-    return re.compile(f"(?:^|/)(?:{alts})\\[")
-
-
-def _is_boiler_path(tag_path: str, boiler_ancestors) -> bool:
-    """The boiler-ancestor predicate, computed ONCE Python-side: any
-    path segment's tag (before its '[n]' index) is a boiler ancestor.
-    Single source of truth for the slim hot path, extract_python, and
-    (semantically) score.py's tag_path regex on the full-schema path —
-    pinned equal by tests/test_pipeline_spark.py parity."""
-    return _boiler_re(tuple(boiler_ancestors)) \
-        .search(tag_path) is not None
+from dxnn_ocr_cpp_spark.schemas import SEGMENT_RESULT
 
 
 def segment_one(raw: bytes | None, cfg: ExtractionConfig,
                 slim: bool = False) -> dict:
-    """Per-document segmentation -> plain dict matching SEGMENT_RESULT
-    (slim=True: SEGMENT_RESULT_SLIM — tag_path replaced by its 1-byte
-    `boiler` verdict, n_tags dropped; the Arrow-boundary diet the
-    schema comment in schemas.py quantifies). Exposed separately so
-    unit tests and goldens exercise the exact production code path
-    without a JVM."""
+    """Per-document segmentation -> plain dict matching SEGMENT_RESULT.
+    Exposed separately so unit tests and goldens exercise the exact
+    production code path without a JVM."""
+    # `slim` is ignored: perfbench/layers.py still passes it
     res = segment_html(raw, cfg.max_candidates, cfg.max_html_bytes,
-                       cfg.sniff_bytes, engine=cfg.parser_engine)
+                       cfg.sniff_bytes, engine=cfg.parser_engine,
+                       boiler_tags=cfg.boiler_ancestors)
     blocks = []
     for b in res.blocks:
         t = normalize_text(b.text_raw)
@@ -72,22 +45,16 @@ def segment_one(raw: bytes | None, cfg: ExtractionConfig,
         # space, so non-ws chars = len - spaces (== sum of split lens,
         # without the list allocation)
         n_text = len(t) - t.count(" ")
-        rec = {
+        blocks.append({
             "block_id": b.block_id,
             "tag": b.tag,
+            "boiler": b.boiler,
             "depth": b.depth,
             "pos": b.pos,
             "text": t,
             "n_text_chars": n_text,
             "n_link_chars": min(b.n_link_chars, n_text),
-        }
-        if slim:
-            rec["boiler"] = _is_boiler_path(b.tag_path,
-                                            cfg.boiler_ancestors)
-        else:
-            rec["tag_path"] = b.tag_path
-            rec["n_tags"] = b.n_tags
-        blocks.append(rec)
+        })
     return {
         "blocks": blocks,
         "n_candidates": res.n_candidates,
@@ -97,16 +64,14 @@ def segment_one(raw: bytes | None, cfg: ExtractionConfig,
     }
 
 
-def make_segment_udf(cfg: ExtractionConfig = DEFAULT_CONFIG,
-                     slim: bool = False):
+def make_segment_udf(cfg: ExtractionConfig = DEFAULT_CONFIG):
     """Build the stage-1 pandas UDF closed over per-run config (the
     OCRTaskConfig flow, ref ocr_pipeline.cpp:457-461 — params travel
     with the task, not with engine construction)."""
-    schema = SEGMENT_RESULT_SLIM if slim else SEGMENT_RESULT
 
-    @F.pandas_udf(schema)
+    @F.pandas_udf(SEGMENT_RESULT)
     def segment_udf(html: pd.Series) -> pd.DataFrame:
-        out = [segment_one(raw, cfg, slim=slim) for raw in html]
+        out = [segment_one(raw, cfg) for raw in html]
         return pd.DataFrame(out)
 
     return segment_udf
@@ -118,5 +83,5 @@ def with_blocks(df, cfg: ExtractionConfig = DEFAULT_CONFIG,
     """df + seg struct column. Keeps the pre-UDF projection minimal so
     parquet/Iceberg scans prune to (url, html) — the pushdown the
     reference never had (X12)."""
-    return df.withColumn(
-        out_col, make_segment_udf(cfg, slim=slim)(F.col(html_col)))
+    # `slim` is ignored: perfbench/layers.py still passes it
+    return df.withColumn(out_col, make_segment_udf(cfg)(F.col(html_col)))

@@ -374,7 +374,7 @@ def winnow_pairs(df: DataFrame, id_col: str = "doc_id",
               set collapses and the O(|A|+|B|) exact intersect runs on
               a sliver of pairs.
       count   df-capped inverted-index self-join + groupBy(a,b) count
-              — one exchange of slim (id, g) rows, partial-aggregated,
+              — one exchange of narrow (id, g) rows, partial-aggregated,
               no arrays. Wins when the fingerprint VOCABULARY is tiny
               relative to the corpus (dense sharing: every fp has high
               df, so prefixes prune little and the per-candidate

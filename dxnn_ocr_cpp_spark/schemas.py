@@ -35,13 +35,12 @@ TASK_CONFIG = T.StructType([
 BLOCK = T.StructType([
     T.StructField("block_id", T.IntegerType(), False),
     T.StructField("tag", T.StringType(), False),
-    T.StructField("tag_path", T.StringType(), False),
+    T.StructField("boiler", T.BooleanType(), False),
     T.StructField("depth", T.IntegerType(), False),
     T.StructField("pos", T.IntegerType(), False),
     T.StructField("text", T.StringType(), False),
     T.StructField("n_text_chars", T.IntegerType(), False),
     T.StructField("n_link_chars", T.IntegerType(), False),
-    T.StructField("n_tags", T.IntegerType(), False),
 ])
 
 # stage-1 UDF return (OCRResult analog, types.hpp:58-80)
@@ -51,38 +50,6 @@ SEGMENT_RESULT = T.StructType([
     T.StructField("truncated", T.BooleanType(), False),
     T.StructField("charset", T.StringType(), False),
     T.StructField("oversized", T.BooleanType(), False),
-])
-
-# SLIM block for the extract() hot path: the Arrow return leg is the
-# data plane's biggest flow (measured ~7.1 KB/doc vs ~5.5 KB/doc on
-# the input leg at the bench corpus), and tag_path alone is ~28% of
-# it — yet the hot path consumes tag_path ONLY as the boiler-ancestor
-# predicate, so the UDF ships the 1-byte `boiler` verdict instead of
-# the ~2 KB path string (and drops n_tags, which nothing on the hot
-# path reads). extract_blocks() keeps the full BLOCK schema — the
-# checkpoint/lineage table still exposes tag_path and n_tags.
-BLOCK_SLIM = T.StructType([
-    T.StructField("block_id", T.IntegerType(), False),
-    T.StructField("tag", T.StringType(), False),
-    T.StructField("boiler", T.BooleanType(), False),
-    T.StructField("depth", T.IntegerType(), False),
-    T.StructField("pos", T.IntegerType(), False),
-    T.StructField("text", T.StringType(), False),
-    T.StructField("n_text_chars", T.IntegerType(), False),
-    T.StructField("n_link_chars", T.IntegerType(), False),
-])
-
-SEGMENT_RESULT_SLIM = T.StructType([
-    T.StructField("blocks", T.ArrayType(BLOCK_SLIM), False),
-    T.StructField("n_candidates", T.IntegerType(), False),
-    T.StructField("truncated", T.BooleanType(), False),
-    T.StructField("charset", T.StringType(), False),
-    T.StructField("oversized", T.BooleanType(), False),
-])
-
-# scored block = BLOCK + score (classifier output analog)
-SCORED_BLOCK = T.StructType(BLOCK.fields + [
-    T.StructField("score", T.DoubleType(), False),
 ])
 
 # emitted span (PipelineOCRResult analog, ocr_pipeline.h:82-93)

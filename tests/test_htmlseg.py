@@ -81,18 +81,43 @@ class TestSegment:
         r = segment_html(b"<p>fish &amp; chips&nbsp;here</p>")
         assert texts(r) == ["fish & chips\xa0here"]
 
-    def test_tag_path_and_depth(self):
+    def test_boiler_verdict_and_depth(self):
         r = segment_html(b"<html><body><div><div><p>x</p></div></div></body></html>")
-        b = r.blocks[0]
-        assert b.tag_path == "html[1]/body[1]/div[1]/div[1]/p[1]"
-        assert b.depth == 5
+        assert r.blocks[0].depth == 5
+        table = [
+            # a block directly under a boiler tag
+            (b"<body><nav><p>menu</p></nav></body>", None,
+             [("menu", True)]),
+            # boiler reaches through non-boiler ancestors
+            (b"<body><footer><div><p>legal</p></div></footer></body>", None,
+             [("legal", True)]),
+            # tail text after </p> belongs to the enclosing boiler block
+            (b"<body><header><p>logo</p>tagline</header></body>", None,
+             [("logo", True), ("tagline", True)]),
+            # text after </nav> is outside it again
+            (b"<body><div><nav>menu</nav>after</div></body>", None,
+             [("menu", True), ("after", False)]),
+            # custom inline boiler tag: the tail re-inherits the nearest
+            # open block (div, not under span) ...
+            (b"<body><div><span><p>in</p>tail</span>out</div></body>",
+             ("span",), [("in", True), ("tailout", False)]),
+            # ... or, with no block open, the innermost open element
+            (b"<body><span><p>in</p>tail</span></body>", ("span",),
+             [("in", True), ("tail", True)]),
+        ]
+        for html, boiler_tags, expected in table:
+            kw = {} if boiler_tags is None else {"boiler_tags": boiler_tags}
+            for eng in ("fast", "ref"):
+                r = segment_html(html, engine=eng, **kw)
+                assert [(b.text_raw, b.boiler) for b in r.blocks] == \
+                    expected, (html, eng)
 
-    def test_sibling_indices(self):
-        r = segment_html(b"<body><p>a</p><p>b</p><div><p>c</p></div></body>")
-        # no <html> wrapper in the input -> paths root at body (the
-        # parser does not synthesize implied elements)
-        assert [b.tag_path for b in r.blocks] == [
-            "body[1]/p[1]", "body[1]/p[2]", "body[1]/div[1]/p[1]"]
+    def test_boiler_is_tag_membership_not_prefix(self):
+        # a tag named 'nav[x' is not 'nav': its content is not boiler
+        from dxnn_ocr_cpp_spark.pipeline import extract_python
+        html = b"<body><nav[x><p>hello world here</p></nav[x></body>"
+        assert [b.boiler for b in segment_html(html).blocks] == [False]
+        assert extract_python("u", html)["text"] == "hello world here"
 
     def test_pos_is_monotonic(self):
         r = segment_html(b"<body><p>a</p><div><p>b</p></div><p>c</p></body>")
@@ -181,3 +206,21 @@ class TestImplicitCloseReconciliation:
         for eng in ("fast", "ref"):
             texts = [b.text_raw for b in segment_html(h, engine=eng).blocks]
             assert texts == ["shown"], eng
+
+
+class TestBoundedCost:
+    """Hostile nesting costs linear time: stray closers and the
+    implied-</head> checks never scan the open-element stack."""
+
+    @pytest.mark.parametrize("html", [
+        b"<div>" * 16384 + b"</span>" * 16384 + b"<p>end</p>",
+        b"<body><svg>" + b"<div>" * 16384 + b"<p>end</p>",
+    ], ids=["stray-closers", "skip-nesting"])
+    def test_deep_nesting_is_fast_and_engines_agree(self, html):
+        import time
+        blocks = {}
+        for eng in ("fast", "ref"):
+            t0 = time.perf_counter()
+            blocks[eng] = segment_html(html, engine=eng).blocks
+            assert time.perf_counter() - t0 < 1.0, eng
+        assert blocks["fast"] == blocks["ref"]

@@ -74,8 +74,8 @@ def test_block_invariants(s):
 # /root/reference/README.md:170-179 — except ours must match exactly) ---
 
 def _key(r):
-    return ([(b.tag, b.tag_path, b.depth, b.pos, b.text_raw,
-              b.n_text_chars, b.n_link_chars, b.n_tags) for b in r.blocks],
+    return ([(b.tag, b.boiler, b.depth, b.pos, b.text_raw,
+              b.n_text_chars, b.n_link_chars) for b in r.blocks],
             r.n_candidates, r.truncated, r.charset, r.oversized)
 
 

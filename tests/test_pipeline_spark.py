@@ -106,39 +106,35 @@ class TestEdgeRows:
             assert sl <= ll
 
 
-class TestSlimBlocks:
-    """The slim Arrow boundary (schemas.BLOCK_SLIM) must be invisible
-    in the OUTPUT: the Python-computed boiler verdict and the dropped
-    tag_path/n_tags change only what the UDF ships, never what
-    extract() emits."""
-
-    def test_slim_boiler_equals_tag_path_regex(self, spark, docs):
-        # per-block: slim's _is_boiler_path verdict == the full
-        # path's rlike(_boiler_path_regex) verdict, block by block
+class TestBlockSchema:
+    def test_extract_and_blocks_share_boiler(self, spark, docs):
+        """extract() and the extract_blocks checkpoint view carry the
+        same one block schema: the same boiler verdict per block, and
+        no path-derived fields."""
         from pyspark.sql import functions as F
 
-        from dxnn_ocr_cpp_spark.config import DEFAULT_CONFIG as cfg
-        from dxnn_ocr_cpp_spark.operators.score import \
-            _boiler_path_regex
-        from dxnn_ocr_cpp_spark.operators.segment import with_blocks
-        full = (with_blocks(docs.select("url", "html"))
-                .select("url", F.explode("seg.blocks").alias("b"))
-                .select("url", "b.block_id",
-                        F.col("b.tag_path")
-                         .rlike(_boiler_path_regex(cfg))
-                         .alias("boiler")))
-        slim = (with_blocks(docs.select("url", "html"), slim=True)
-                .select("url", F.explode("seg.blocks").alias("b"))
-                .select("url", "b.block_id",
-                        F.col("b.boiler").alias("boiler")))
-        a = {(r["url"], r["block_id"]): r["boiler"]
-             for r in full.collect()}
-        b = {(r["url"], r["block_id"]): r["boiler"]
-             for r in slim.collect()}
+        from dxnn_ocr_cpp_spark.schemas import BLOCK
+        hot = extract(docs, keep_intermediate=True)
+        view = extract_blocks(docs)
+        # exactly the one block schema: nothing path-derived rides along
+        assert hot.schema["seg"].dataType["blocks"].dataType \
+            .elementType.names == BLOCK.names
+        assert view.columns == ["url", *BLOCK.names, "score"]
+        hot_rows = (hot.select("url", F.explode("seg.blocks").alias("b"))
+                    .select("url", "b.block_id", "b.boiler").collect())
+        view_rows = (view.filter("block_id is not null")
+                     .select("url", "block_id", "boiler").collect())
+        a = {(r["url"], r["block_id"]): r["boiler"] for r in hot_rows}
+        b = {(r["url"], r["block_id"]): r["boiler"] for r in view_rows}
         assert a == b and any(a.values()) and not all(a.values())
 
+
+class TestSlimBlocks:
+    """The segmenter ships a slim block: the boiler verdict is computed
+    in Python, and the tag path it was read from never reaches the
+    extract() output."""
+
     def test_slim_schema_has_no_tag_path(self, spark, docs):
-        from dxnn_ocr_cpp_spark.pipeline import extract
         out = extract(docs, keep_intermediate=True)
         fields = {f.name for f in
                   out.schema["seg"].dataType["blocks"]

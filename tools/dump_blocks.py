@@ -7,10 +7,10 @@ Usage:
     python tools/dump_blocks.py [--n 5] [--out /tmp/block_dump]
 
 Renders the first N corpus documents: every candidate block with its
-tag path, score, link density, and whether the span filter kept it —
-the heuristic-tuning feedback loop (why did this block drop?). Debug
-tool only: collects N documents to the driver by design; never part of
-the hot path.
+depth, boiler marker, score, link density, and whether the span filter
+kept it — the heuristic-tuning feedback loop (why did this block
+drop?). Debug tool only: collects N documents to the driver by design;
+never part of the hot path.
 """
 
 from __future__ import annotations
@@ -66,7 +66,7 @@ def render_doc(url: str, blocks: list, cfg) -> str:
             f"<div class='block {cls}'>"
             f"<div class='meta'>#{b['block_id']} "
             f"&lt;{html_mod.escape(b['tag'])}&gt; "
-            f"{html_mod.escape(b['tag_path'])} "
+            f"depth={b['depth']}{' boiler' if b['boiler'] else ''} "
             f"<span class='score'>score={b['score']:.3f}</span> "
             f"chars={b['n_text_chars']} link_density={ld:.2f}{reason}</div>"
             f"{html_mod.escape(b['text'])}</div>")
