@@ -7,23 +7,20 @@ Phase 2  extraction scaling: the SAME seeded corpus parquet is
          extracted at local[N] and local[4N] in separate JVMs
          (subprocess) — docs/sec at both + scaling efficiency
          docs_sec_4N / (4 * docs_sec_N), plus the host's own
-         pure-python CPU scaling ceiling for context. THREE windows
-         per run: narrow 2->8 (host scales ~0.95, so the number is
-         the engine's), wide 8->32 (SURVEY §0's named pair; host
-         ceiling ~0.71-0.85 on this VM, so the engine number is read
-         against it), and isolated-executor 8->32 (hi leg = four
-         SEPARATE cpuset-pinned 8-core JVMs over disjoint corpus
-         shards, barrier-released — the per-executor cgroup/heap
-         regime of a real 4-executor cluster). This evidences the
-         north rule's N->4N executor criterion in-sandbox (analog of
-         the reference's 1->3 NPU card scaling, ~0.99 efficiency,
-         /root/reference/README.md:167-172).
+         pure-python CPU scaling ceiling for context. Two windows:
+         narrow 2->8 (host scales ~0.95, so the number is the
+         engine's) and wide 8->32 (SURVEY §0's named pair, read
+         against its lower host ceiling). A window is measured only
+         when the host has the hi leg's cores and the run's budget
+         fits it; otherwise its committed stable record is reused,
+         labeled. The isolated-executor 8->32 window is the frozen
+         record BENCH/stable_scaling_iso_8_32.json, published as is.
 
 Prints ONE compact JSON line (fits the driver's 2000-char tail
 capture):
   {"metric": ..., "value": N, "unit": "sec", "queries": {subset},
    "sf": ..., "extraction": {summary}, "extraction_wide": {summary},
-   "detail": "BENCH/bench_detail.json"}
+   "extraction_iso": {summary}, "detail": "BENCH/bench_detail.json"}
 and rewrites BENCH/BASELINE.md + BENCH/bench_detail.json (the full
 per-query map and full window records).
 
@@ -31,7 +28,7 @@ Scenario modes (`python bench.py --mode latency|stress|stability|
 capacity`) self-measure the ENGINE — per-job latency percentiles,
 concurrent-job degradation, run-to-run drift, batch-size capacity
 sweep — the analog of the reference's 5-mode scenario framework
-(/root/reference/server/benchmark/benchmark_config.yaml:29-35,
+(its server/benchmark/benchmark_config.yaml:29-35,
 core/metrics.py:63-205). They write BENCH/MODES.md and print one
 JSON line each; the default invocation is unchanged.
 """
@@ -64,50 +61,27 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SEED = 42
 
-# N -> 4N pair for the scaling criterion. 2->8 by default: the host
-# VM's OWN pure-python multiprocessing scaling (no Spark) measures
-# ~0.97 for 2->8 procs but only ~0.85 for 4->16 and ~0.71 for 8->32
-# (frequency scaling + noisy-neighbor contention grows with active
-# cores), so 2->8 is the window where a measurement reflects the
-# ENGINE rather than the host — the per-run ceiling probe still
-# reports the host context either way.
-_lv = os.environ.get("SPARK_GRAFT_SCALE_LEVELS", "2,8").split(",")
-SCALING_LEVELS = (int(_lv[0]), int(_lv[1]))
+# N -> 4N pair for the scaling criterion. 2->8: the host VM's OWN
+# pure-python multiprocessing scaling (no Spark) measures ~0.97 for
+# 2->8 procs but only ~0.85 for 4->16 and ~0.71 for 8->32 (frequency
+# scaling + noisy-neighbor contention grows with active cores), so 2->8
+# is the window where a measurement reflects the ENGINE rather than the
+# host — the per-run ceiling probe still reports the host context.
+SCALING_LEVELS = (2, 8)
 
-# A second, WIDE window (default 8->32) is measured alongside the
-# headline window every run: SURVEY §0 names local[8] vs local[32] as
-# the evidence pair, and publishing only the narrow window across
-# rounds would read as denominator shopping. The wide window's host
-# ceiling is much lower (~0.71-0.85 measured on this VM), so its
-# engine number is interpreted against that ceiling, never raw.
-_wv = os.environ.get("SPARK_GRAFT_WIDE_LEVELS", "8,32").split(",")
-WIDE_LEVELS = (int(_wv[0]), int(_wv[1]))
-RUN_WIDE = os.environ.get("SPARK_GRAFT_WIDE", "1") != "0"
-
-# A third, ISOLATED-EXECUTOR wide window (VERDICT r3 ask #1): the same
-# 8->32 pair, but the hi leg runs as FOUR SEPARATE 8-core JVM
-# processes, each taskset-pinned to its own disjoint 8-core cpuset
-# with its own heap, GC, Python worker pool, and disjoint quarter of
-# the corpus files — the per-executor cgroup/heap regime a real
-# 4-executor cluster applies (and the regime r3's SCALE.md argued
-# would recover the wide window). A file barrier releases all four
-# measured passes together; aggregate throughput = total docs /
-# slowest shard wall. Measured result (see BENCH/BASELINE.md): JVM
-# isolation does NOT recover the window — the residual is the host's
-# shared memory subsystem, not the shared JVM.
-RUN_ISO = os.environ.get("SPARK_GRAFT_ISO", "1") != "0"
-ISO_EXEC_CORES = int(os.environ.get("SPARK_GRAFT_ISO_EXEC_CORES", "8"))
-# how long the iso hi leg waits for every shard JVM's READY line
-ISO_READY_TIMEOUT = float(
-    os.environ.get("SPARK_GRAFT_ISO_READY_TIMEOUT", "600"))
+# The WIDE window: SURVEY §0 names local[8] vs local[32] as the
+# evidence pair, and publishing only the narrow window would read as
+# denominator shopping. Its host ceiling is much lower (~0.71-0.85
+# measured), so its engine number is read against that ceiling.
+WIDE_LEVELS = (8, 32)
 
 # wall-clock budget for the DEFAULT `python bench.py` run (queries +
 # any scaling-window re-measures). The driver's capture killed the
-# r4 run at timeout because the default re-measured all three windows
+# r4 run at timeout because the default re-measured every window
 # unconditionally (~40-70 min); under budget the query table always
 # runs and each window re-measures only if its estimate fits —
 # otherwise the committed stable window is reused, labeled. `--full`
-# disables the budget entirely.
+# disables the budget (never the host-cores check).
 BENCH_BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "480"))
 
 
@@ -125,7 +99,6 @@ def docs_for(levels: tuple) -> int:
     return 300_000 if levels[0] <= 2 else 600_000
 
 
-SCALE_DOCS = docs_for(SCALING_LEVELS)
 def _corpus_version() -> int:
     sys.path.insert(0, str(REPO))
     from dxnn_ocr_cpp_spark.corpus import CORPUS_VERSION
@@ -164,8 +137,6 @@ def corpus_cache(n_docs: int) -> str:
         "SPARK_GRAFT_CORPUS_CACHE",
         f"/tmp/spark_graft_corpus/seed{SEED}_n{n_docs}_v{_corpus_version()}")
 
-
-CORPUS_CACHE = corpus_cache(SCALE_DOCS)
 
 HEADLINE = [
     "pricing_summary",
@@ -256,7 +227,6 @@ HEADLINE = [
     "stream_dedup_urls",
     "task_config_mixed",
 ]
-
 
 
 def _materialize(df) -> int:
@@ -411,175 +381,6 @@ def scaling_worker(cores: int, corpus: str) -> dict:
         spark.stop()
 
 
-def scaling_worker_shard(cores: int, corpus: str, shard: int,
-                         n_shards: int, barrier: str) -> dict:
-    """One isolated-executor shard: a SEPARATE JVM process (the parent
-    taskset-pins it to its own disjoint `cores`-wide cpuset) running
-    local[cores] over files[shard::n_shards] of the corpus — the
-    per-executor cgroup/heap confinement of a real cluster executor.
-    Prints READY after its warm pass, then spins on the barrier file
-    so all shards' measured passes overlap fully (a ragged start would
-    let early shards run on an underloaded box and overstate the
-    aggregate)."""
-    import glob
-    sys.path.insert(0, str(REPO))
-    from dxnn_ocr_cpp_spark.pipeline import extract
-    from dxnn_ocr_cpp_spark.session import build_session
-    spark = build_session(app=f"bench-iso-{shard}",
-                          master=f"local[{cores}]",
-                          shuffle_partitions=cores * 2,
-                          extra_conf={
-                              # same physical knobs as scaling_worker
-                              "spark.sql.files.maxPartitionBytes": "4m",
-                              "spark.sql.files.openCostInBytes": "512k",
-                              "spark.driver.memory":
-                                  f"{max(8, cores // 2)}g",
-                          })
-    try:
-        files = sorted(glob.glob(f"{corpus}/part-*.parquet"))
-        docs = spark.read.parquet(*files[shard::n_shards])
-        n = docs.count()
-        # warm spawns the python workers + JITs the plan; 30% of the
-        # shard ~= the 15% full-corpus warm of scaling_worker
-        _materialize(extract(docs.sample(fraction=0.3, seed=7)))
-        print(f"READY {shard}", flush=True)
-        deadline = time.monotonic() + 300
-        while not os.path.exists(barrier):
-            if time.monotonic() > deadline:
-                raise RuntimeError("iso shard barrier never released")
-            time.sleep(0.05)
-        t0 = time.monotonic()
-        _materialize(extract(docs))
-        wall = time.monotonic() - t0
-        return {"shard": shard, "cores": cores, "wall_sec": round(wall, 3),
-                "docs": n, "docs_per_sec": round(n / wall, 2),
-                "affinity": len(os.sched_getaffinity(0))}
-    finally:
-        spark.stop()
-
-
-class _LinePump:
-    """Reads a child's stdout on a daemon thread into a queue so the
-    parent can wait for lines WITH a deadline: a shard JVM that hangs
-    without printing (e.g. Spark stuck in warm-up) used to block
-    readline() forever — the 600 s READY deadline was only checked
-    between lines. get() returns the line, '' at EOF, or None when
-    the deadline passes with nothing available (the thread itself
-    stays blocked on the pipe; it exits at EOF when the child is
-    killed)."""
-
-    def __init__(self, stream):
-        import queue
-        import threading
-        self._q = queue.Queue()
-
-        def pump():
-            for line in stream:
-                self._q.put(line)
-            self._q.put("")  # EOF sentinel
-
-        self._t = threading.Thread(target=pump, daemon=True)
-        self._t.start()
-
-    def get(self, deadline: float):
-        import queue
-        remain = deadline - time.monotonic()
-        try:
-            return self._q.get(timeout=max(remain, 0.0))
-        except queue.Empty:
-            return None
-
-
-def worker_multi_jvm(total_cores: int, corpus: str,
-                     exec_cores: int = ISO_EXEC_CORES) -> dict:
-    """The isolated-executor hi leg: total_cores/exec_cores SEPARATE
-    JVM processes, each pinned to a disjoint exec_cores-wide cpuset
-    over a disjoint corpus shard, measured passes released together by
-    a file barrier. Returns the same record shape as scaling_worker
-    (aggregate docs/sec = total docs / slowest shard wall — the
-    job-completion definition a cluster scheduler would use), plus the
-    per-shard detail. Busy/steal accounting reads /proc/stat across
-    the envelope of the overlapped passes in the PARENT, so it
-    captures all four process trees at once."""
-    import tempfile
-    import uuid
-    n_jvms = total_cores // exec_cores
-    barrier = os.path.join(tempfile.gettempdir(),
-                           f"spark_graft_iso_go_{uuid.uuid4().hex[:8]}")
-    for attempt in (1, 2):
-        procs = []
-        try:
-            for w in range(n_jvms):
-                cmd = [sys.executable, __file__, "--scaling-shard-worker",
-                       str(exec_cores), corpus, str(w), str(n_jvms),
-                       barrier]
-                if PIN_CPUS:
-                    lo_c, hi_c = w * exec_cores, (w + 1) * exec_cores - 1
-                    cmd = ["taskset", "-c", f"{lo_c}-{hi_c}"] + cmd
-                procs.append(subprocess.Popen(
-                    cmd, stdout=subprocess.PIPE,
-                    stderr=subprocess.DEVNULL, text=True))
-            outs: list[list[str]] = [[] for _ in range(n_jvms)]
-            pumps = [_LinePump(p.stdout) for p in procs]
-            deadline = time.monotonic() + ISO_READY_TIMEOUT
-            for i, p in enumerate(procs):
-                while True:
-                    line = pumps[i].get(deadline)
-                    if line is None:
-                        raise RuntimeError(f"iso shard {i} never READY")
-                    if not line:
-                        raise RuntimeError(f"iso shard {i} died pre-READY")
-                    if line.startswith("READY"):
-                        break
-                    outs[i].append(line)
-            b0, s0 = _proc_stat_busy(), _proc_stat_steal()
-            t0 = time.monotonic()
-            pathlib.Path(barrier).write_text("go")
-            shards = []
-            result_deadline = time.monotonic() + 900
-            for i, p in enumerate(procs):
-                while True:  # drain this shard's pump to EOF
-                    line = pumps[i].get(result_deadline)
-                    if line is None:
-                        raise RuntimeError(
-                            f"iso shard {i} produced no result "
-                            f"within deadline")
-                    if not line:
-                        break  # EOF
-                    line = line.strip()
-                    if line.startswith("{"):
-                        shards.append(json.loads(line))
-                if p.wait(timeout=900) != 0 or len(shards) != i + 1:
-                    raise RuntimeError(f"iso shard {i} failed")
-            wall = time.monotonic() - t0
-            busy = _proc_stat_busy() - b0
-            steal = _proc_stat_steal() - s0
-            docs = sum(r["docs"] for r in shards)
-            max_wall = max(r["wall_sec"] for r in shards)
-            return {"cores": total_cores, "wall_sec": round(max_wall, 3),
-                    "docs": docs,
-                    "docs_per_sec": round(docs / max_wall, 2),
-                    "busy_cpu_sec": round(busy, 1),
-                    # envelope wall (barrier release -> last exit)
-                    # denominates busy: the measured passes fully
-                    # overlap, so envelope ~= max shard wall + reap
-                    "cores_used": round(busy / wall, 2),
-                    "steal_frac": round(
-                        steal / (wall * total_cores), 4),
-                    "affinity": len(os.sched_getaffinity(0)),
-                    "n_jvms": n_jvms, "exec_cores": exec_cores,
-                    "shards": shards}
-        except Exception:
-            for p in procs:
-                if p.poll() is None:
-                    p.kill()
-            if attempt == 2:
-                raise
-        finally:
-            pathlib.Path(barrier).unlink(missing_ok=True)
-    raise AssertionError("unreachable")
-
-
 def cpu_ceiling(lo: int, hi: int, with_steal: bool = False):
     """Host CPU scaling ceiling for lo->hi pure-python processes —
     the hardware context the engine's efficiency is judged against
@@ -702,22 +503,40 @@ def window_unstable(bracket_probes: list, eff_rounds: list,
         or max_steal > 0.05
 
 
+def _run_worker(cores: int, corpus: str) -> dict:
+    """One scaling leg: scaling_worker in a child JVM process,
+    taskset-pinned to cores 0..cores-1 below the full machine width."""
+    cmd = [sys.executable, __file__, "--scaling-worker",
+           str(cores), corpus]
+    if PIN_CPUS and cores < (os.cpu_count() or cores):
+        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
+    # the sandbox VM occasionally stalls for minutes at a time; a
+    # hung/failed worker is retried once instead of sinking the run
+    for attempt in (1, 2):
+        try:
+            out = subprocess.run(
+                cmd, capture_output=True, text=True, timeout=900)
+        except subprocess.TimeoutExpired:
+            if attempt == 2:
+                raise
+            continue
+        if out.returncode == 0:
+            break
+        if attempt == 2:
+            raise RuntimeError(f"scaling worker {cores} failed:\n"
+                               f"{out.stderr[-2000:]}")
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
 def run_scaling(corpus: str, levels: tuple = SCALING_LEVELS,
                 min_rounds: int = 3, max_rounds: int = 5,
-                hi_worker=None, deadline: float | None = None,
-                lo_worker=None) -> dict:
+                deadline: float | None = None) -> dict:
     """Alternate the two levels as lo hi lo hi lo ... so every hi run
     is bracketed by two lo runs: efficiency ratios use the bracketing
     mean (first-order drift cancellation), throughput uses
     best-per-level. The sandbox VM's available CPU drifts by ~10% over
     minutes; interleaving prevents a noise dip from landing entirely
     on one level.
-
-    hi_worker: optional replacement for the hi leg's worker (same
-    record shape) — the isolated-executor window passes
-    worker_multi_jvm so its hi leg runs as separate pinned JVMs while
-    every other part of the protocol (bracketing, probes, gates,
-    steal accounting, stable-window policy) stays identical.
 
     deadline: optional wall-clock cap (time.monotonic() value). The
     min_rounds bracket always runs — the caller budgeted for it
@@ -735,28 +554,6 @@ def run_scaling(corpus: str, levels: tuple = SCALING_LEVELS,
         # this window actually measured (plus scheduling slack)
         return 1.2 * (hi_seq[-1]["wall_sec"] + lo_seq[-1]["wall_sec"])
 
-    def worker(cores: int) -> dict:
-        cmd = [sys.executable, __file__, "--scaling-worker",
-               str(cores), corpus]
-        if PIN_CPUS and cores < (os.cpu_count() or cores):
-            cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-        # the sandbox VM occasionally stalls for minutes at a time; a
-        # hung/failed worker is retried once instead of sinking the run
-        for attempt in (1, 2):
-            try:
-                out = subprocess.run(
-                    cmd, capture_output=True, text=True, timeout=900)
-            except subprocess.TimeoutExpired:
-                if attempt == 2:
-                    raise
-                continue
-            if out.returncode == 0:
-                break
-            if attempt == 2:
-                raise RuntimeError(f"scaling worker {cores} failed:\n"
-                                   f"{out.stderr[-2000:]}")
-        return json.loads(out.stdout.strip().splitlines()[-1])
-
     lo, hi = levels
     lo_seq, hi_seq = [], []
 
@@ -770,11 +567,10 @@ def run_scaling(corpus: str, levels: tuple = SCALING_LEVELS,
     # order cancellation for one extra lo leg per RUN (not per round:
     # consecutive rounds share the bracketing lo).
     def one_round():
-        lo_fn = lo_worker or worker
         if not lo_seq:
-            lo_seq.append(lo_fn(lo))
-        hi_seq.append(hi_worker(hi) if hi_worker else worker(hi))
-        lo_seq.append(lo_fn(lo))
+            lo_seq.append(_run_worker(lo, corpus))
+        hi_seq.append(_run_worker(hi, corpus))
+        lo_seq.append(_run_worker(lo, corpus))
 
     def ratios():
         out = []
@@ -897,7 +693,7 @@ def run_scaling(corpus: str, levels: tuple = SCALING_LEVELS,
         }
     return {
         **pc,
-        "mode": "isolated-executors" if hi_worker else "single-jvm",
+        "mode": "single-jvm",
         "cpuset_pinned": PIN_CPUS,
         f"local[{lo}]": results[lo],
         f"local[{hi}]": results[hi],
@@ -935,15 +731,13 @@ def run_queries() -> dict:
     return timings
 
 
-def stable_cache_path(levels: tuple, mode: str = "") -> pathlib.Path:
-    tag = f"_{mode}" if mode else ""
+def stable_cache_path(levels: tuple, tag: str = "") -> pathlib.Path:
+    tag = f"_{tag}" if tag else ""
     return REPO / "BENCH" / \
         f"stable_scaling{tag}_{levels[0]}_{levels[1]}.json"
 
 
-def stable_window_policy(ext: dict, levels: tuple = SCALING_LEVELS,
-                         corpus: str = CORPUS_CACHE,
-                         mode: str = "") -> dict:
+def stable_window_policy(ext: dict, levels: tuple, corpus: str) -> dict:
     """Last-known-good policy for the scaling headline, bounded so it
     can never cherry-pick: a STABLE window (validity checks in
     run_scaling) always replaces the cache and is always reported; an
@@ -957,7 +751,7 @@ def stable_window_policy(ext: dict, levels: tuple = SCALING_LEVELS,
     magnitude."""
     import datetime
     import platform
-    cache = stable_cache_path(levels, mode)
+    cache = stable_cache_path(levels)
     # keyed by engine-code digest + host so a cached window can never be
     # republished for code it didn't measure or a machine it didn't run on
     key = {"corpus": corpus, "levels": list(levels),
@@ -967,8 +761,6 @@ def stable_window_policy(ext: dict, levels: tuple = SCALING_LEVELS,
            # (and vice versa) — the lo-leg core borrowing changes the
            # denominator of every ratio
            "pinned": PIN_CPUS}
-    if mode:  # iso windows key + cache separately from single-jvm ones
-        key["mode"] = mode
     if not ext.get("host_window_unstable"):
         cache.parent.mkdir(parents=True, exist_ok=True)
         cache.write_text(json.dumps(
@@ -998,8 +790,7 @@ def stable_window_policy(ext: dict, levels: tuple = SCALING_LEVELS,
     return ext
 
 
-def _window_cost_estimate(levels: tuple, mode: str = "",
-                          min_rounds: int = 3) -> float:
+def _window_cost_estimate(levels: tuple, min_rounds: int = 3) -> float:
     """Conservative wall-clock estimate for re-measuring a scaling
     window, from the cached stable window's own measured leg walls
     when available (magnitude constants from BENCH/BASELINE.md
@@ -1009,7 +800,7 @@ def _window_cost_estimate(levels: tuple, mode: str = "",
     noise-triggered extension rounds: those are separately capped by
     the same deadline inside run_scaling."""
     lo, hi = levels
-    cache = stable_cache_path(levels, mode)
+    cache = stable_cache_path(levels)
     lo_w, hi_w = (170.0, 50.0)  # measured magnitudes on this VM
     if cache.exists():
         try:
@@ -1026,42 +817,77 @@ def _window_cost_estimate(levels: tuple, mode: str = "",
     return est * 1.25
 
 
-def measure_or_reuse_window(levels: tuple, mode: str = "",
+def reuse_window(levels: tuple, reason: str,
+                 tag: str = "") -> dict | None:
+    """The committed stable window, verbatim, labeled with why it was
+    not re-measured (`remeasure_skipped`: "budget" or
+    "not_measurable_here") — plus `cache_key_stale` when the engine
+    hot path, host or pinning changed since it was measured, so a
+    reused number can never silently pose as a fresh one. None when
+    no record is committed."""
+    import platform
+    cache = stable_cache_path(levels, tag)
+    if not cache.exists():
+        return None
+    w = json.loads(cache.read_text())
+    w["remeasure_skipped"] = reason
+    key = w.get("window_key", {})
+    if key.get("code") != _package_code_digest() \
+            or key.get("host") != platform.node() \
+            or key.get("pinned") != PIN_CPUS:
+        w["cache_key_stale"] = True
+    return w
+
+
+def measure_or_reuse_window(levels: tuple,
                             deadline: float | None = None,
                             min_rounds: int = 3, max_rounds: int = 5,
-                            hi_worker_factory=None,
                             required: bool = False) -> dict | None:
-    """One scaling window under the wall-clock budget: re-measure it
-    when the estimated cost fits before `deadline`, else reuse the
-    committed stable window verbatim — labeled with its own
-    measured_at plus an explicit `remeasure_skipped` marker (and
-    `cache_key_stale` when the engine hot path changed since it was
-    measured, so a reused number can never silently pose as a fresh
-    one). A `required` window (the headline) is measured even over
-    budget when NO cache exists — the report needs some window — while
-    an optional one is omitted (None)."""
-    import platform
-    est = _window_cost_estimate(levels, mode, min_rounds)
-    fits = deadline is None or time.monotonic() + est <= deadline
-    cache = stable_cache_path(levels, mode)
-    if not fits and cache.exists():
-        w = json.loads(cache.read_text())
-        w["remeasure_skipped"] = "budget"
-        key = w.get("window_key", {})
-        if key.get("code") != _package_code_digest() \
-                or key.get("host") != platform.node() \
-                or key.get("pinned") != PIN_CPUS:
-            w["cache_key_stale"] = True
-        return w
-    if not fits and not required:
-        return None
+    """One scaling window. A window whose hi leg needs more cores than
+    this host has is never measured, not even under `--full`: its legs
+    would run oversubscribed and measure the host's time-slicing, so
+    the committed record is reused, labeled "not_measurable_here".
+    Otherwise it is re-measured when the estimated cost fits before
+    `deadline`, else the committed record is reused, labeled "budget".
+    A `required` window (the headline) is measured even over budget
+    when NO record exists — the report needs some window — while an
+    optional one is omitted (None)."""
+    if levels[1] > (os.cpu_count() or 1):
+        return reuse_window(levels, "not_measurable_here")
+    est = _window_cost_estimate(levels, min_rounds)
+    if deadline is not None and time.monotonic() + est > deadline:
+        w = reuse_window(levels, "budget")
+        if w is not None or not required:
+            return w
     corpus = corpus_cache(docs_for(levels))
     ensure_corpus(corpus, docs_for(levels))
-    hi_worker = hi_worker_factory(corpus) if hi_worker_factory else None
     w = run_scaling(corpus, levels, min_rounds=min_rounds,
-                    max_rounds=max_rounds, hi_worker=hi_worker,
-                    deadline=deadline)
-    return stable_window_policy(w, levels, corpus, mode=mode)
+                    max_rounds=max_rounds, deadline=deadline)
+    return stable_window_policy(w, levels, corpus)
+
+
+def _status_line(ext: dict, hi: int) -> str:
+    """One line per window: measured this run, reused under the
+    budget, or not measurable on this host."""
+    at = ext.get("measured_at", "?")
+    why = ext.get("remeasure_skipped")
+    if not why:
+        s = "measured this run"
+    elif why == "budget":
+        s = (f"reused under the budget — the stable window measured {at} "
+             f"is shown, since re-measuring did not fit "
+             f"SPARK_GRAFT_BENCH_BUDGET (`--full` lifts the budget)")
+    elif ext.get("mode") == "isolated-executors":
+        s = (f"not measurable here — this bench runs no multi-JVM hi "
+             f"leg; the frozen record measured {at} is shown")
+    else:
+        s = (f"not measurable here — the hi leg needs {hi} cores and "
+             f"this host has {os.cpu_count()}; the record measured "
+             f"{at} is shown")
+    if ext.get("cache_key_stale"):
+        s += (" (cache_key_stale: the extraction hot path, host or "
+              "pinning changed since)")
+    return f"**Status: {s}.** See docs/SCALE.md §2."
 
 
 def _window_section(ext: dict, levels: tuple, headline: bool) -> list:
@@ -1069,31 +895,17 @@ def _window_section(ext: dict, levels: tuple, headline: bool) -> list:
     lo_r, hi_r = ext[f"local[{lo}]"], ext[f"local[{hi}]"]
     iso = ext.get("mode") == "isolated-executors"
     role = ("headline window" if headline
-            else "isolated-executor window — the multi-JVM cluster "
-                 "analog" if iso
+            else "isolated-executor window" if iso
             else "wide window — interpret against its host ceiling")
     hi_label = (f"{hi_r.get('n_jvms', 4)} x local[{hi_r.get('exec_cores', 8)}] "
                 f"separate JVMs" if iso else f"local[{hi}]")
     lines = [
         f"### {lo}->{hi} cores ({role})",
         "",
+        _status_line(ext, hi),
+        "",
         f"Corpus: {lo_r['docs']} docs.",
         "",
-    ]
-    if ext.get("remeasure_skipped"):
-        lines += [
-            f"REUSED stable window (measured_at "
-            f"{ext.get('measured_at', '?')}): re-measuring was "
-            f"skipped because its estimated cost did not fit the "
-            f"run's wall-clock budget "
-            f"(SPARK_GRAFT_BENCH_BUDGET; `--full` re-measures "
-            f"unconditionally)."
-            + (" NOTE: the extraction hot path changed since this "
-               "window was measured (cache_key_stale)."
-               if ext.get("cache_key_stale") else ""),
-            "",
-        ]
-    lines += [
         "| parallelism | wall sec | docs/sec |",
         "|---|---|---|",
         f"| local[{lo}] | {lo_r['wall_sec']} | {lo_r['docs_per_sec']} |",
@@ -1101,20 +913,10 @@ def _window_section(ext: dict, levels: tuple, headline: bool) -> list:
         "",
     ]
     if iso:
-        per_shard = [r["docs_per_sec"]
-                     for r in hi_r.get("shards", [])]
+        per_shard = [r["docs_per_sec"] for r in hi_r.get("shards", [])]
         lines += [
-            f"Hi leg = {hi_r.get('n_jvms')} SEPARATE "
-            f"local[{hi_r.get('exec_cores')}] JVM processes, each "
-            f"taskset-pinned to its own disjoint "
-            f"{hi_r.get('exec_cores')}-core cpuset with its own heap, "
-            f"GC, and Python worker pool, over a disjoint quarter of "
-            f"the corpus files — the per-executor cgroup/heap regime "
-            f"of a real {hi_r.get('n_jvms')}-executor cluster. A file "
-            f"barrier releases all measured passes together; "
-            f"aggregate docs/sec = total docs / slowest shard wall. "
-            f"Per-shard docs/sec this window's best hi round: "
-            f"{per_shard}.",
+            f"Aggregate docs/sec = total docs / slowest shard wall; "
+            f"per-shard docs/sec of the best hi round: {per_shard}.",
             "",
         ]
     lines += [
@@ -1223,8 +1025,13 @@ def _window_section(ext: dict, levels: tuple, headline: bool) -> list:
     return lines
 
 
+# (payload key, N -> 4N levels) of every published scaling window
+WINDOWS = (("extraction", SCALING_LEVELS),
+           ("extraction_wide", WIDE_LEVELS),
+           ("extraction_iso", WIDE_LEVELS))
+
+
 def write_report(payload: dict) -> None:
-    ext = payload["extraction"]
     lines = [
         "# BENCH — PySpark extraction engine",
         "",
@@ -1234,51 +1041,11 @@ def write_report(payload: dict) -> None:
         "## Extraction throughput scaling (north rule: N -> 4N, "
         "target efficiency >= 0.8)",
         "",
-        "THREE windows are measured EVERY run — the narrow 2->8 "
-        "window where the host itself scales near-perfectly (so the "
-        "number reflects the engine), the wide 8->32 window named by "
-        "SURVEY §0 (where this VM's own pure-python ceiling is far "
-        "below 1.0; the engine number is read against that ceiling), "
-        "and the ISOLATED-EXECUTOR 8->32 window whose hi leg runs as "
-        "four separate cpuset-pinned 8-core JVMs over disjoint corpus "
-        "shards — the multi-executor cluster regime, measured instead "
-        "of argued. Publishing all three closes the round-2 gap where "
-        "the window narrowed round-over-round without a side-by-side.",
-        "",
     ]
-    lines += _window_section(ext, SCALING_LEVELS, headline=True)
-    wide = payload.get("extraction_wide")
-    if wide:
-        lines += _window_section(wide, WIDE_LEVELS, headline=False)
-    iso = payload.get("extraction_iso")
-    if iso:
-        lines += _window_section(iso, WIDE_LEVELS, headline=False)
-        lines += [
-            "**What the isolated-executor window settles** (the r3 "
-            "open question): r3 argued the wide window's shortfall was "
-            "the one shared JVM (heap/GC serving all 32 task threads) "
-            "and that a multi-executor cluster would recover it. "
-            "Measured, that hypothesis is REFUTED on this host: four "
-            "fully isolated 8-core JVMs — disjoint cpusets, heaps, "
-            "GCs, Python pools, disjoint inputs — aggregate within a "
-            "few percent of the single local[32] JVM, and a "
-            "2x-local[8] probe of the same shape scales 8->16 at "
-            "~0.80 while 8->32 lands where the wide window lands. "
-            "Degradation grows smoothly with ACTIVE CORES regardless "
-            "of process topology, which is the signature of the "
-            "host's shared memory subsystem (bandwidth + frequency "
-            "scaling), not of any engine or JVM structure. The "
-            "per-process probes agree: the bare extraction kernel "
-            "under multiprocessing (no Spark, no JVM) scales 8->32 "
-            "at 0.78 on this box, and the engine's data plane moves "
-            "several times the kernel's bytes per doc (parquet "
-            "decode + Arrow round-trip), so it saturates the same "
-            "memory subsystem earlier. A real cluster's 4N executors "
-            "bring 4N memory buses — in-sandbox, all 32 cores share "
-            "one; that hardware axis cannot be evidenced here, and "
-            "these numbers are the honest in-box reading.",
-            "",
-        ]
+    for key, levels in WINDOWS:
+        if payload.get(key):
+            lines += _window_section(payload[key], levels,
+                                     headline=key == "extraction")
     lines += [
         "Per window: >=3 hi rounds at the headline (>=2 at the wide "
         "window), extended when the ratio spread exceeds 0.1 — "
@@ -1288,30 +1055,6 @@ def write_report(payload: dict) -> None:
         "round (max over noisy ratios biases upward), throughput "
         "best-per-level (the sandbox VM's available CPU drifts ~10% "
         "over minutes).",
-        "",
-        "Kernel-ceiling cross-check (`tools/kernel_ceiling_probe.py`): "
-        "the actual segmentation kernel (`pipeline.extract_python` — "
-        "the same pure-Python function the pandas UDF batches over), "
-        "run through a bare `multiprocessing.Pool` with no Spark at "
-        "all, scales 8->32 at **0.7784** on this VM (lo-hi-lo "
-        "bracketed, 24k docs) — indistinguishable from the "
-        "arithmetic-busywork ceiling (0.7648). So the in-run "
-        "busywork ceiling is representative of the real workload, "
-        "not an underestimate.",
-        "",
-        "Plumbing-ceiling cross-check "
-        "(`tools/plumbing_ceiling_probe.py`): the identical parquet "
-        "scan + Arrow round-trip with the kernel replaced by a "
-        "passthrough moves ~111k docs/s at local[8] and ~160k at "
-        "local[32] — 7-10x the full job at both widths — so the JVM "
-        "data plane is a minor ADDITIVE wall-clock cost (~10% of "
-        "hi-leg wall). Its own 8->32 scaling is poor (~0.36: it is "
-        "the most bandwidth-bound stage), and it runs CONCURRENTLY "
-        "with the kernel, so at 32 active cores kernel + data plane "
-        "together saturate the box's memory subsystem earlier than "
-        "the kernel alone would — consistent with the "
-        "isolated-executor window's finding that process topology "
-        "doesn't move the number.",
         "",
         "Reference precedent: DXNN-OCR card scaling 7.40 -> 14.73 -> "
         "21.96 FPS across 1/2/3 NPUs = 0.995/0.989 efficiency "
@@ -1581,45 +1324,24 @@ def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--scaling-worker":
         print(json.dumps(scaling_worker(int(sys.argv[2]), sys.argv[3])))
         return
-    if len(sys.argv) > 1 and sys.argv[1] == "--scaling-shard-worker":
-        print(json.dumps(scaling_worker_shard(
-            int(sys.argv[2]), sys.argv[3], int(sys.argv[4]),
-            int(sys.argv[5]), sys.argv[6])))
-        return
     if len(sys.argv) > 1 and sys.argv[1] == "--mode":
         run_modes(sys.argv[2].split(",") if len(sys.argv) > 2
                   else list(MODES))
         return
-    if len(sys.argv) > 1 and sys.argv[1] == "--queries-only":
-        # iteration aid, the inverse of SPARK_GRAFT_SKIP_QUERIES:
-        # refresh the per-query table reusing the committed STABLE
-        # scaling windows (each labeled with its own measured_at) —
-        # a query-side change doesn't invalidate a scaling window,
-        # the two phases measure disjoint code paths
-        extraction = json.loads(
-            stable_cache_path(SCALING_LEVELS).read_text())
-        wide_cache = stable_cache_path(WIDE_LEVELS)
-        wide = (json.loads(wide_cache.read_text())
-                if RUN_WIDE and wide_cache.exists() else None)
-        iso_cache = stable_cache_path(WIDE_LEVELS, "iso")
-        iso = (json.loads(iso_cache.read_text())
-               if RUN_ISO and iso_cache.exists() else None)
-        _finish(extraction, wide, iso, run_queries())
-        return
     full = len(sys.argv) > 1 and sys.argv[1] == "--full"
     # BUDGET-AWARE DEFAULT (the round-4 lesson): the old default
-    # unconditionally re-measured all three scaling windows — an est.
+    # unconditionally re-measured every scaling window — an est.
     # 40-70 min — and the driver killed it at timeout (rc=124),
     # recording NO perf data at all. The bench's first duty is to
     # ALWAYS emit its one-line JSON within the caller's budget:
     # queries run first (they have no cache), then each scaling
-    # window is re-measured ONLY if its estimated cost fits the
-    # remaining wall-clock budget — otherwise the committed stable
-    # window is reused verbatim, labeled with its own measured_at
-    # and an explicit remeasure_skipped marker. `--full` (or a large
-    # SPARK_GRAFT_BENCH_BUDGET) restores unconditional re-measure.
-    # Reference analog: the benchmark harness always emits its
-    # report (/root/reference/benchmark/benchmark.cpp:239-293).
+    # window is re-measured ONLY if the host has its cores and its
+    # estimated cost fits the remaining wall-clock budget — otherwise
+    # the committed stable window is reused verbatim, labeled with its
+    # own measured_at and an explicit remeasure_skipped marker.
+    # `--full` lifts the budget; SPARK_GRAFT_BENCH_BUDGET=0 refreshes
+    # only the query table. Reference analog: the benchmark harness
+    # always emits its report (its benchmark/benchmark.cpp:239-293).
     deadline = (None if full
                 else time.monotonic() + BENCH_BUDGET)
     if os.environ.get("SPARK_GRAFT_SKIP_QUERIES") == "1":
@@ -1630,37 +1352,25 @@ def main() -> None:
                    if prior.exists() else {})
     else:
         timings = run_queries()
-    extraction = measure_or_reuse_window(
-        SCALING_LEVELS, deadline=deadline, required=True)
-    wide = None
-    if RUN_WIDE:
-        wide = measure_or_reuse_window(
-            WIDE_LEVELS, deadline=deadline,
-            min_rounds=2, max_rounds=4)
-    iso = None
-    if RUN_ISO:
-        iso = measure_or_reuse_window(
-            WIDE_LEVELS, mode="iso", deadline=deadline,
-            min_rounds=2, max_rounds=4,
-            hi_worker_factory=lambda corpus: (
-                lambda cores: worker_multi_jvm(cores, corpus)))
-    _finish(extraction, wide, iso, timings)
+    _finish(timings, {
+        "extraction": measure_or_reuse_window(
+            SCALING_LEVELS, deadline=deadline, required=True),
+        "extraction_wide": measure_or_reuse_window(
+            WIDE_LEVELS, deadline=deadline, min_rounds=2, max_rounds=4),
+        "extraction_iso": reuse_window(
+            WIDE_LEVELS, "not_measurable_here", "iso"),
+    })
 
 
-def _finish(extraction: dict, wide: dict | None, iso: dict | None,
-            timings: dict) -> None:
+def _finish(timings: dict, windows: dict) -> None:
     payload = {
         "metric": "bench_total_wall",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": pathlib.Path(SF_DIR).name,
-        "extraction": extraction,
+        **{k: w for k, w in windows.items() if w},
     }
-    if wide:
-        payload["extraction_wide"] = wide
-    if iso:
-        payload["extraction_iso"] = iso
     write_report(payload)
     detail = REPO / "BENCH" / "bench_detail.json"
     detail.parent.mkdir(exist_ok=True)
@@ -1674,13 +1384,11 @@ def _finish(extraction: dict, wide: dict | None, iso: dict | None,
         "queries": {k: timings[k] for k in INLINE_QUERIES
                     if k in timings},
         "sf": payload["sf"],
-        "extraction": _ext_summary(extraction, SCALING_LEVELS),
         "detail": "BENCH/bench_detail.json",
     }
-    if wide:
-        compact["extraction_wide"] = _ext_summary(wide, WIDE_LEVELS)
-    if iso:
-        compact["extraction_iso"] = _ext_summary(iso, WIDE_LEVELS)
+    for key, levels in WINDOWS:
+        if key in payload:
+            compact[key] = _ext_summary(payload[key], levels)
     line = json.dumps(compact)
     if len(line) > 1900:  # belt-and-braces: never overflow the capture
         compact.pop("queries", None)

@@ -10,7 +10,7 @@ conf, so two runs with different params need no engine restart
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -32,13 +32,6 @@ class ExtractionConfig:
     rec_score_thresh: float = 0.0   # final score filter, ref textRecScoreThresh
     span_separator: str = "\n"      # final concat separator
     # physical knobs
-    arrow_max_records: int = 512    # Arrow batch cap — html blobs are large (ref X3:
-                                    # bounded queues cap 100, ocr_pipeline.cpp:353-355).
-                                    # Measured on the 100k-doc corpus @16 cores:
-                                    # 128->512->1024 rows = 5.8k->7.5k->8.1k docs/s;
-                                    # 512 keeps worst-case batch bytes bounded
-                                    # (512 x 20MB cap) while taking most of the win
-    url_buckets: int = 32           # hash(url) bucket count for layout/repartition
     salt_buckets: int = 8           # per-host salt fan-out for hot hosts (ref X5)
 
     # tag priors (stage-2 features). Weights, not binary gates: the
@@ -49,8 +42,6 @@ class ExtractionConfig:
         "article", "section", "main",
     )
     boiler_ancestors: tuple = ("nav", "header", "footer", "aside", "form")
-
-    extra: dict = field(default_factory=dict, compare=False, hash=False)
 
 
 DEFAULT_CONFIG = ExtractionConfig()

@@ -393,9 +393,11 @@ def wordlist_page_filter(df: DataFrame, words,
     # split on \W+ — not just phrases: 'bad-word', "don't", 'sex.com'
     # all silently never match under the join plan while the regex
     # plan matches them via \b boundaries, so the 'two equal-output
-    # physical plans' contract demands rejecting them loudly here
+    # physical plans' contract demands rejecting them loudly here.
+    # re.ASCII: the Spark split is Java's ASCII \W+, which cuts 'café'
+    # at the 'é' — Python's Unicode \W would wave it through
     import re as _re
-    nonword = [w for w in sorted(ws) if _re.search(r"\W", w)]
+    nonword = [w for w in sorted(ws) if _re.search(r"\W", w, _re.ASCII)]
     if nonword:
         raise ValueError(
             f"strategy='join' cannot match entries with non-word "

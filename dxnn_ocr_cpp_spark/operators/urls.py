@@ -203,6 +203,15 @@ def url_wordlist_score(df: DataFrame, weighted_words,
             "(only separator chars [-._%])")
     if not pairs:
         raise ValueError("url_wordlist_score: empty word list")
+    # two entries normalizing to one probe would each add their weight
+    # on a single presence, breaking the once-per-word contract
+    seen, clash = set(), set()
+    for w, _ in pairs:
+        (clash if w in seen else seen).add(w)
+    if clash:
+        raise ValueError(
+            f"url_wordlist_score: entries collide under normalization "
+            f"{sorted(clash)[:3]} — merge them into one weight")
     if len(pairs) > 1000:
         raise ValueError(
             "url_wordlist_score: >1000 entries — the literal "

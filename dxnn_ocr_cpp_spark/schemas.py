@@ -52,23 +52,6 @@ SEGMENT_RESULT = T.StructType([
     T.StructField("oversized", T.BooleanType(), False),
 ])
 
-# emitted span (PipelineOCRResult analog, ocr_pipeline.h:82-93)
-SPAN = T.StructType([
-    T.StructField("span_index", T.IntegerType(), False),
-    T.StructField("text", T.StringType(), False),
-    T.StructField("score", T.DoubleType(), False),
-    T.StructField("pos", T.IntegerType(), False),
-])
-
-# final output table
-EXTRACTED = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("text", T.StringType(), False),
-    T.StructField("n_spans", T.IntegerType(), False),
-    T.StructField("n_candidates", T.IntegerType(), False),
-    T.StructField("charset", T.StringType(), False),
-])
-
 # per-partition lineage record (OCRPipelineStats analog, ocr_pipeline.h:98-128)
 LINEAGE = T.StructType([
     T.StructField("run_id", T.StringType(), False),

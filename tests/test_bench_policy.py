@@ -79,7 +79,7 @@ class TestWindowUnstable:
         monkeypatch.setattr(bench, "REPO", tmp_path)
         monkeypatch.setattr(
             bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / "s.json")
+            lambda levels, tag="": tmp_path / "s.json")
         w = TestStableWindowPolicy()._window(0.21, 0.96, unstable=False)
         w["local[8]"]["docs_per_sec"] = 5.0  # below local[2]'s 10.0
         key = {"corpus": "c", "levels": [2, 8],
@@ -116,7 +116,7 @@ class TestStableWindowPolicy:
         monkeypatch.setattr(bench, "REPO", tmp_path)
         monkeypatch.setattr(
             bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
+            lambda levels, tag="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
         w = self._window(0.95, 0.97, unstable=False)
         out = bench.stable_window_policy(w, self.LEVELS, "corpusA")
         assert out is w
@@ -130,7 +130,7 @@ class TestStableWindowPolicy:
         monkeypatch.setattr(bench, "REPO", tmp_path)
         monkeypatch.setattr(
             bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
+            lambda levels, tag="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
         good = self._window(0.95, 0.97, unstable=False)
         bench.stable_window_policy(good, self.LEVELS, "corpusA")
         bad = self._window(0.70, 0.97, unstable=True)
@@ -145,7 +145,7 @@ class TestStableWindowPolicy:
         monkeypatch.setattr(bench, "REPO", tmp_path)
         monkeypatch.setattr(
             bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
+            lambda levels, tag="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
         import platform
 
         poisoned = self._window(1.0508, 0.9541, unstable=False)
@@ -166,7 +166,7 @@ class TestStableWindowPolicy:
         monkeypatch.setattr(bench, "REPO", tmp_path)
         monkeypatch.setattr(
             bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
+            lambda levels, tag="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
         monkeypatch.setattr(bench, "PIN_CPUS", False)
         good = self._window(0.95, 0.97, unstable=False)
         bench.stable_window_policy(good, self.LEVELS, "corpusA")
@@ -179,7 +179,7 @@ class TestStableWindowPolicy:
         monkeypatch.setattr(bench, "REPO", tmp_path)
         monkeypatch.setattr(
             bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
+            lambda levels, tag="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
         good = self._window(0.95, 0.97, unstable=False)
         bench.stable_window_policy(good, self.LEVELS, "corpusA")
         bad = self._window(0.70, 0.97, unstable=True)
@@ -230,9 +230,14 @@ class TestCompactLine:
         assert len(json.dumps(s)) < 250
 
     def test_full_compact_line_fits_tail_capture(self):
-        # worst-case shape: every inline query present at 4-char
-        # timings + both window summaries
+        # real worst case: every inline query at 6-char timings + all
+        # three window summaries, each reused (cached timestamp) from
+        # a stale cache key and carrying per-core efficiency
         w = TestStableWindowPolicy()._window(0.95, 0.97, unstable=False)
+        w["per_core_efficiency"] = 0.9063
+        w.update(measured_at="2026-08-21T18:49:29+00:00",
+                 remeasure_skipped="not_measurable_here",
+                 cache_key_stale=True)
         wide = dict(w)
         wide["local[32]"] = w["local[8]"]
         compact = {
@@ -240,37 +245,15 @@ class TestCompactLine:
             "unit": "sec",
             "queries": {k: 99.999 for k in bench.INLINE_QUERIES},
             "sf": "sf0.1",
-            "extraction": bench._ext_summary(w, (2, 8)),
             "detail": "BENCH/bench_detail.json",
+            "extraction": bench._ext_summary(w, (2, 8)),
             "extraction_wide": bench._ext_summary(wide, (8, 32)),
+            "extraction_iso": bench._ext_summary(wide, (8, 32)),
         }
+        for key in ("extraction", "extraction_wide", "extraction_iso"):
+            assert compact[key]["cached"] == w["measured_at"]
+            assert compact[key]["stale"] is True
         assert len(json.dumps(compact)) < 1500
-
-
-class TestQueriesOnly:
-    def test_reuses_cached_stable_windows(self, tmp_path, monkeypatch,
-                                          capsys):
-        import sys as _sys
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / f"s_{levels[0]}_{levels[1]}.json")
-        w = TestStableWindowPolicy()._window(0.95, 0.97, unstable=False)
-        (tmp_path / "s_2_8.json").write_text(json.dumps(w))
-        # wide cache absent -> queries-only must cope without it
-        monkeypatch.setattr(bench, "SCALING_LEVELS", (2, 8))
-        monkeypatch.setattr(bench, "run_queries",
-                            lambda: {"q1": 1.25, "q2": 0.75})
-        monkeypatch.setattr(_sys, "argv", ["bench.py", "--queries-only"])
-        bench.main()
-        line = capsys.readouterr().out.strip().splitlines()[-1]
-        d = json.loads(line)
-        assert d["value"] == 2.0
-        assert d["extraction"]["efficiency"] == 0.95
-        assert "extraction_wide" not in d
-        # report + detail written against the cached window
-        assert (tmp_path / "BENCH" / "bench_detail.json").exists()
-        assert "0.95" in (tmp_path / "BENCH" / "BASELINE.md").read_text()
 
 
 class TestBudgetAwareDefault:
@@ -286,9 +269,12 @@ class TestBudgetAwareDefault:
         monkeypatch.setattr(bench, "REPO", tmp_path)
         monkeypatch.setattr(
             bench, "stable_cache_path",
-            lambda levels, mode="":
-                tmp_path / f"s{'_' + mode if mode else ''}"
+            lambda levels, tag="":
+                tmp_path / f"s{'_' + tag if tag else ''}"
                            f"_{levels[0]}_{levels[1]}.json")
+        # the budget policy under test; the host-cores check is
+        # pinned separately (TestNotMeasurableHere)
+        monkeypatch.setattr(bench.os, "cpu_count", lambda: 32)
         w = TestStableWindowPolicy()._window(0.95, 0.97, unstable=False)
         key = {"corpus": "c", "levels": [2, 8],
                "code": (bench._package_code_digest() if key_ok
@@ -345,9 +331,10 @@ class TestBudgetAwareDefault:
     def test_required_window_without_cache_measures_over_budget(
             self, tmp_path, monkeypatch):
         monkeypatch.setattr(bench, "REPO", tmp_path)
+        monkeypatch.setattr(bench.os, "cpu_count", lambda: 32)
         monkeypatch.setattr(
             bench, "stable_cache_path",
-            lambda levels, mode="": tmp_path / "absent.json")
+            lambda levels, tag="": tmp_path / "absent.json")
         fresh = TestStableWindowPolicy()._window(0.9, 0.95,
                                                 unstable=False)
         monkeypatch.setattr(bench, "ensure_corpus", lambda *a: None)
@@ -363,9 +350,8 @@ class TestBudgetAwareDefault:
         # on this VM, NO window re-measure fits the default 480 s
         # budget once queries have run — the default driver run is
         # queries + cached windows, well under its timeout
-        for levels, mode, mr in [((2, 8), "", 3), ((8, 32), "", 2),
-                                 ((8, 32), "iso", 2)]:
-            assert bench._window_cost_estimate(levels, mode, mr) > 300
+        for levels, mr in [((2, 8), 3), ((8, 32), 2)]:
+            assert bench._window_cost_estimate(levels, mr) > 300
 
 
 class TestDeadlineCappedRounds:
@@ -393,21 +379,26 @@ class TestDeadlineCappedRounds:
                 (0.95, 0.0) if with_steal else 0.95)
         monkeypatch.setattr(bench, "_proc_stat_steal", lambda: 0.0)
 
+    def _patch_workers(self, monkeypatch):
+        lo_fn, hi_fn = self._fake_workers()
+        monkeypatch.setattr(
+            bench, "_run_worker",
+            lambda cores, corpus: hi_fn(cores) if cores == 8
+            else lo_fn(cores))
+
     def test_noisy_window_extends_without_deadline(self, monkeypatch):
         self._quiet_probes(monkeypatch)
-        lo_fn, hi_fn = self._fake_workers()
+        self._patch_workers(monkeypatch)
         out = bench.run_scaling("/nonexistent", (2, 8), min_rounds=2,
-                                max_rounds=4, hi_worker=hi_fn,
-                                lo_worker=lo_fn)
+                                max_rounds=4)
         assert len(out["efficiency_per_round"]) == 4  # extended
 
     def test_noisy_window_respects_deadline(self, monkeypatch):
         import time as _t
         self._quiet_probes(monkeypatch)
-        lo_fn, hi_fn = self._fake_workers()
+        self._patch_workers(monkeypatch)
         out = bench.run_scaling("/nonexistent", (2, 8), min_rounds=2,
-                                max_rounds=4, hi_worker=hi_fn,
-                                lo_worker=lo_fn,
+                                max_rounds=4,
                                 deadline=_t.monotonic() + 0.5)
         # min_rounds always run; extensions don't fit a 0.5 s budget
         # against the 12 s estimated round cost
@@ -447,20 +438,6 @@ class TestCodeDigestClosure:
 
 
 class TestIsoShardSlicing:
-    def test_shards_partition_files_disjointly(self):
-        # worker w of W reads files[w::W]: together the shards must
-        # cover every corpus file exactly once (a gap would silently
-        # shrink the measured hi-leg work; an overlap would double it)
-        files = [f"part-{i:05d}.parquet" for i in range(64)]
-        W = 4
-        shards = [files[w::W] for w in range(W)]
-        flat = [f for s in shards for f in s]
-        assert sorted(flat) == files
-        assert len(set(flat)) == len(files)
-        # balanced to within one file
-        sizes = [len(s) for s in shards]
-        assert max(sizes) - min(sizes) <= 1
-
     def test_iso_stable_cache_is_separate_from_single_jvm(self):
         # the iso window must never republish (or be substituted by)
         # a single-JVM 8->32 window: distinct cache files
@@ -470,123 +447,76 @@ class TestIsoShardSlicing:
         assert "iso" in b.name
 
 
-class TestWorkerMultiJvm:
-    """worker_multi_jvm protocol units — subprocess stubbed, no Spark."""
+class TestNotMeasurableHere:
+    """A window whose hi leg needs more cores than the host has is
+    never measured, not even under `--full`: oversubscribed legs would
+    measure the host's time-slicing, not the engine."""
 
-    class _FakeStdout:
-        def __init__(self, lines):
-            self._lines = list(lines)
+    def _no_measure(self, monkeypatch):
+        def boom(*a, **k):
+            raise AssertionError("measured an oversubscribed window")
+        monkeypatch.setattr(bench, "run_scaling", boom)
+        monkeypatch.setattr(bench, "ensure_corpus", boom)
+        monkeypatch.setattr(bench.os, "cpu_count", lambda: 4)
 
-        def readline(self):
-            return self._lines.pop(0) if self._lines else ""
-
-        def __iter__(self):
-            while self._lines:
-                yield self._lines.pop(0)
-
-    class _FakeProc:
-        def __init__(self, lines, rc=0):
-            self.stdout = TestWorkerMultiJvm._FakeStdout(lines)
-            self._rc = rc
-            self.killed = False
-
-        def wait(self, timeout=None):
-            return self._rc
-
-        def poll(self):
-            return self._rc
-
-        def kill(self):
-            self.killed = True
-
-    def _shard_json(self, w, dps=1000.0):
-        return ('{"shard": %d, "cores": 8, "wall_sec": 10.0, '
-                '"docs": 150000, "docs_per_sec": %s, "affinity": 8}\n'
-                % (w, dps))
-
-    def test_aggregates_and_releases_barrier(self, monkeypatch):
-        procs = []
-
-        def fake_popen(cmd, **kw):
-            w = len(procs)
-            p = self._FakeProc([f"READY {w}\n", self._shard_json(w)])
-            procs.append(p)
-            return p
-
-        monkeypatch.setattr(bench.subprocess, "Popen", fake_popen)
-        monkeypatch.setattr(bench, "_proc_stat_busy", lambda: 0.0)
-        monkeypatch.setattr(bench, "_proc_stat_steal", lambda: 0.0)
-        r = bench.worker_multi_jvm(32, "/nonexistent", exec_cores=8)
-        assert r["n_jvms"] == 4 and len(r["shards"]) == 4
-        assert r["docs"] == 600000
-        # aggregate = total docs / slowest shard wall
-        assert r["docs_per_sec"] == round(600000 / 10.0, 2)
-
-    def test_silent_hung_shard_trips_deadline_not_readline(
+    def test_wide_window_on_small_host_reuses_committed_record(
             self, monkeypatch):
-        # the ADVICE hang: a shard JVM stuck in warm-up produces NO
-        # output; the old code blocked in p.stdout.readline() forever
-        # because the 600 s deadline was only checked between lines.
-        # A pump thread now owns the stream, so the READY wait times
-        # out, the attempt is killed, and the retry succeeds.
-        import threading
+        self._no_measure(monkeypatch)
+        committed = json.loads(
+            bench.stable_cache_path((8, 32)).read_text())
+        out = bench.measure_or_reuse_window((8, 32), deadline=None)
+        assert out["remeasure_skipped"] == "not_measurable_here"
+        assert out["measured_at"] == committed["measured_at"]
+        assert out["scaling_efficiency"] == committed["scaling_efficiency"]
 
-        class _HungStdout:
-            """Blocks forever on iteration (until released)."""
+    def test_full_run_on_small_host_measures_nothing(
+            self, tmp_path, monkeypatch, capsys):
+        import shutil
+        import sys as _sys
+        self._no_measure(monkeypatch)
+        (tmp_path / "BENCH").mkdir()
+        for f in (bench.REPO / "BENCH").glob("stable_scaling_*.json"):
+            shutil.copy(f, tmp_path / "BENCH" / f.name)
+        monkeypatch.setattr(bench, "REPO", tmp_path)
+        monkeypatch.setattr(bench, "run_queries",
+                            lambda: {"q1": 1.25, "q2": 0.75})
+        monkeypatch.setattr(_sys, "argv", ["bench.py", "--full"])
+        bench.main()
+        line = capsys.readouterr().out.strip().splitlines()[-1]
+        assert len(line) <= 1900
+        d = json.loads(line)
+        assert d["value"] == 2.0
+        detail = json.loads(
+            (tmp_path / "BENCH" / "bench_detail.json").read_text())
+        for key, levels in bench.WINDOWS:
+            tag = "iso" if key == "extraction_iso" else ""
+            committed = json.loads(
+                bench.stable_cache_path(levels, tag).read_text())
+            assert d[key]["cached"] == committed["measured_at"]
+            assert detail[key]["remeasure_skipped"] == \
+                "not_measurable_here"
+        report = (tmp_path / "BENCH" / "BASELINE.md").read_text()
+        assert report.count("not measurable here") == 3
 
-            def __init__(self):
-                self.release = threading.Event()
 
-            def __iter__(self):
-                self.release.wait()
-                return iter(())
-
-        hung_procs = []
-        attempt_procs = {"i": 0, "n": 0}
-        outer = self
-
-        def fake_popen(cmd, **kw):
-            if attempt_procs["i"] == 0:
-                attempt_procs["n"] += 1
-            w = attempt_procs["i"]
-            attempt_procs["i"] = (w + 1) % 4
-            if attempt_procs["n"] == 1 and w == 0:
-                p = outer._FakeProc([])
-                p.stdout = _HungStdout()
-                p.poll = lambda: None  # still running, like a real hang
-                hung_procs.append(p)
-                return p
-            return outer._FakeProc(
-                [f"READY {w}\n", outer._shard_json(w)])
-
-        monkeypatch.setattr(bench.subprocess, "Popen", fake_popen)
-        monkeypatch.setattr(bench, "_proc_stat_busy", lambda: 0.0)
-        monkeypatch.setattr(bench, "_proc_stat_steal", lambda: 0.0)
-        monkeypatch.setattr(bench, "ISO_READY_TIMEOUT", 0.3)
-        t0 = __import__("time").monotonic()
-        r = bench.worker_multi_jvm(32, "/nonexistent", exec_cores=8)
-        assert __import__("time").monotonic() - t0 < 30
-        assert attempt_procs["n"] == 2 and r["docs"] == 600000
-        assert hung_procs[0].killed
-        for p in hung_procs:  # let the pump thread exit
-            p.stdout.release.set()
-
-    def test_dead_shard_retries_once_then_succeeds(self, monkeypatch):
-        attempts = {"n": 0}
-        procs_this_attempt = {"i": 0}
-
-        def fake_popen(cmd, **kw):
-            if procs_this_attempt["i"] == 0:
-                attempts["n"] += 1
-            w = procs_this_attempt["i"]
-            procs_this_attempt["i"] = (w + 1) % 4
-            if attempts["n"] == 1 and w == 0:
-                return self._FakeProc([])  # dies before READY
-            return self._FakeProc([f"READY {w}\n", self._shard_json(w)])
-
-        monkeypatch.setattr(bench.subprocess, "Popen", fake_popen)
-        monkeypatch.setattr(bench, "_proc_stat_busy", lambda: 0.0)
-        monkeypatch.setattr(bench, "_proc_stat_steal", lambda: 0.0)
-        r = bench.worker_multi_jvm(32, "/nonexistent", exec_cores=8)
-        assert attempts["n"] == 2  # first attempt failed, second ran
-        assert r["docs"] == 600000
+class TestKnobs:
+    def test_environment_reads_are_exactly_the_kept_knobs(self):
+        # every SPARK_GRAFT_* variable bench.py reads, via
+        # os.environ.get / os.getenv / os.environ[...]
+        import ast
+        tree = ast.parse((bench.REPO / "bench.py").read_text())
+        read = set()
+        for node in ast.walk(tree):
+            arg = None
+            if isinstance(node, ast.Call) and node.args and (
+                    (isinstance(node.func, ast.Attribute)
+                     and node.func.attr in ("get", "getenv"))):
+                arg = node.args[0]
+            elif isinstance(node, ast.Subscript):
+                arg = node.slice
+            if isinstance(arg, ast.Constant) \
+                    and isinstance(arg.value, str) \
+                    and arg.value.startswith("SPARK_GRAFT_"):
+                read.add(arg.value[len("SPARK_GRAFT_"):])
+        assert read == {"PIN", "SF_DIR", "CPUS", "BENCH_BUDGET",
+                        "SCALE_DOCS", "CORPUS_CACHE", "SKIP_QUERIES"}

@@ -668,6 +668,14 @@ class TestWordlistFilter:
             with pytest.raises(ValueError, match="non-word"):
                 fn(df, [w], strategy="join")
 
+    def test_join_strategy_rejects_non_ascii_word_chars(self, spark):
+        # the join splits on Java's ASCII \W+, which cuts 'café' into
+        # 'caf' — the entry could never equal a token, so it must be
+        # rejected even though Python's Unicode \w covers 'é'
+        fn, df = self._docs(spark)
+        with pytest.raises(ValueError, match="non-word"):
+            fn(df, ["café"], strategy="join")
+
     def test_strategies_agree_where_join_is_legal(self, spark):
         # any list the join guard ADMITS must produce identical
         # output under both physical plans

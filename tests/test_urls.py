@@ -557,6 +557,14 @@ class TestUrlWordlistScore:
         with pytest.raises(ValueError, match="normalization"):
             url_wordlist_score(df, [("-._", 1.0)])
 
+    def test_entries_colliding_under_normalization_raise(self, spark):
+        # 'bad-word' and 'bad.word' both probe as 'badword': summing
+        # both weights on one occurrence would break presence semantics
+        from dxnn_ocr_cpp_spark.operators.urls import url_wordlist_score
+        df = spark.createDataFrame([("u",)], "url string")
+        with pytest.raises(ValueError, match="collide"):
+            url_wordlist_score(df, [("bad-word", 1.0), ("bad.word", 0.5)])
+
     def test_entries_normalized_like_urls(self, spark):
         # an entry written with separators ('bad-alpha', 'bad.alpha')
         # must probe as its normalized form instead of silently
