@@ -503,9 +503,11 @@ def window_unstable(bracket_probes: list, eff_rounds: list,
         or max_steal > 0.05
 
 
-def _run_worker(cores: int, corpus: str) -> dict:
+def _run_worker(cores: int, corpus: str, timeout: float) -> dict:
     """One scaling leg: scaling_worker in a child JVM process,
-    taskset-pinned to cores 0..cores-1 below the full machine width."""
+    taskset-pinned to cores 0..cores-1 below the full machine width.
+    `timeout` (s) bounds each attempt; run_scaling passes its window's
+    cost estimate, which no single leg of that window can exceed."""
     cmd = [sys.executable, __file__, "--scaling-worker",
            str(cores), corpus]
     if PIN_CPUS and cores < (os.cpu_count() or cores):
@@ -515,7 +517,7 @@ def _run_worker(cores: int, corpus: str) -> dict:
     for attempt in (1, 2):
         try:
             out = subprocess.run(
-                cmd, capture_output=True, text=True, timeout=900)
+                cmd, capture_output=True, text=True, timeout=timeout)
         except subprocess.TimeoutExpired:
             if attempt == 2:
                 raise
@@ -556,6 +558,7 @@ def run_scaling(corpus: str, levels: tuple = SCALING_LEVELS,
 
     lo, hi = levels
     lo_seq, hi_seq = [], []
+    leg_timeout = _window_cost_estimate(levels, min_rounds)
 
     # BRACKETED rounds: every hi run sits between two lo runs and its
     # ratio is taken against their MEAN. A back-to-back (lo, hi) pair
@@ -568,9 +571,9 @@ def run_scaling(corpus: str, levels: tuple = SCALING_LEVELS,
     # consecutive rounds share the bracketing lo).
     def one_round():
         if not lo_seq:
-            lo_seq.append(_run_worker(lo, corpus))
-        hi_seq.append(_run_worker(hi, corpus))
-        lo_seq.append(_run_worker(lo, corpus))
+            lo_seq.append(_run_worker(lo, corpus, leg_timeout))
+        hi_seq.append(_run_worker(hi, corpus, leg_timeout))
+        lo_seq.append(_run_worker(lo, corpus, leg_timeout))
 
     def ratios():
         out = []

@@ -13,6 +13,7 @@ XOR of the per-partition hashes.
 
 Resume: anti-join the input on already-checkpointed urls — idempotent,
 re-running a partially-complete run never duplicates work or rows.
+Lineage reads only the files each write added: a resume costs what it adds.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from dxnn_ocr_cpp_spark.schemas import LINEAGE
 
@@ -73,6 +75,7 @@ class CheckpointedRun:
         self.spark = spark
         self.root = root.rstrip("/")
         self.run_id = run_id or new_run_id()
+        self._schemas: dict[str, StructType] = {}  # stages written here
 
     def _stage_path(self, stage: str) -> str:
         return f"{self.root}/{stage}/data"
@@ -81,27 +84,42 @@ class CheckpointedRun:
         # parquet write is atomic-ish via _SUCCESS marker
         return os.path.exists(os.path.join(self._stage_path(stage), "_SUCCESS"))
 
-    def read_stage(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._stage_path(stage))
+    def read_stage(self, stage: str, schema: StructType | None = None) -> DataFrame:
+        # a known schema (given, or written here) skips an inference job
+        schema = schema or self._schemas.get(stage)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._stage_path(stage))
 
-    def run_stage(self, stage: str, df_fn, inputs_done: DataFrame | None = None,
-                  bytes_in_col: str | None = None,
+    def _write(self, stage: str, df: DataFrame, mode: str, t0: float,
+               bytes_in_col: str | None, bytes_out_col: str | None) -> DataFrame:
+        """Write one stage (overwrite or append), then its lineage from
+        only the files this write added, read with the schema just written."""
+        path = self._stage_path(stage)
+
+        def files():  # Spark's rule: names starting with _ or . are not data
+            return {f"{path}/{f}" for f in os.listdir(path) if f[0] not in "_."} \
+                if os.path.isdir(path) else set()
+        before = files() if mode == "append" else set()
+        df.write.mode(mode).parquet(path)
+        self._schemas[stage] = df.schema
+        # an overwrite's files are all new: read the directory
+        added = sorted(files() - before) if mode == "append" else [path]
+        new = self.spark.read.schema(df.schema).parquet(*added)
+        lin = lineage_rows(new, self.run_id, stage, bytes_in_col, bytes_out_col) \
+            .withColumn("wall_ms", F.lit((time.monotonic() - t0) * 1000.0))
+        lin.coalesce(1).write.mode("append").parquet(f"{self.root}/_lineage")
+        return new
+
+    def run_stage(self, stage: str, df_fn, bytes_in_col: str | None = None,
                   bytes_out_col: str | None = None,
-                  force: bool = False) -> DataFrame:
-        """Execute-or-resume one stage. `df_fn()` builds the stage
-        DataFrame lazily; it only runs when the checkpoint is absent —
-        or when `force` says an upstream stage was extended and this
-        derived checkpoint is stale."""
+                  append: bool = False) -> DataFrame:
+        """Execute-or-resume one stage: lazy `df_fn()` overwrites the
+        checkpoint when it is absent or marked stale, or is appended to it
+        when `append` says it holds rows the checkpoint lacks."""
         t0 = time.monotonic()
-        if force or not self.has_stage(stage):
-            df = df_fn()
-            df.write.mode("overwrite").parquet(self._stage_path(stage))
-            out = self.read_stage(stage)
-            wall = (time.monotonic() - t0) * 1000.0
-            lin = lineage_rows(out, self.run_id, stage, bytes_in_col, bytes_out_col) \
-                .withColumn("wall_ms", F.lit(wall))
-            (lin.coalesce(1).write.mode("append")
-                .parquet(f"{self.root}/_lineage"))
+        if append or not self.has_stage(stage):
+            self._write(stage, df_fn(), "append" if append else "overwrite", t0,
+                        bytes_in_col, bytes_out_col)
         return self.read_stage(stage)
 
     def invalidate_stage(self, stage: str) -> None:
@@ -121,7 +139,8 @@ class CheckpointedRun:
         processed and APPENDED. This is the real per-doc resume — a
         prior run that completed over a subset of the corpus (or a
         re-submission with new documents) only pays for the missing
-        keys. Returns (stage DataFrame, appended: bool).
+        keys: df_fn(todo) runs once, so resume cost is proportional to
+        the increment. Returns (stage DataFrame, rows written or None).
 
         `invalidates` lists DERIVED stage checkpoints; their _SUCCESS
         markers are removed on disk BEFORE this stage is extended, so a
@@ -130,35 +149,17 @@ class CheckpointedRun:
 
         df_fn(todo) must emit >=1 row per input key (F8: block-less
         docs still get a null-block row) or resume would re-do them.
-        Lineage is computed over the INCREMENT only (re-evaluating
-        df_fn(todo) once more — increment-sized): full-checkpoint
-        rescans would both double-count row sums in _lineage and
-        re-hash 10^12 rows to record a 1-row append.
         """
         t0 = time.monotonic()
-        if not self.has_stage(stage):
-            for s in invalidates:
-                self.invalidate_stage(s)
-            df_fn(inputs).write.mode("overwrite").parquet(self._stage_path(stage))
-            appended = True
-            lin_src = self.read_stage(stage)
-        else:
-            todo = self.resume_filter(inputs, stage, key=key)
-            appended = not todo.isEmpty()
-            if appended:
-                for s in invalidates:
-                    self.invalidate_stage(s)
-                out_new = df_fn(todo)
-                out_new.write.mode("append").parquet(self._stage_path(stage))
-                lin_src = out_new
-        if appended:
-            wall = (time.monotonic() - t0) * 1000.0
-            lin = lineage_rows(lin_src, self.run_id, stage,
-                               bytes_in_col, bytes_out_col) \
-                .withColumn("wall_ms", F.lit(wall))
-            (lin.coalesce(1).write.mode("append")
-                .parquet(f"{self.root}/_lineage"))
-        return self.read_stage(stage), appended
+        fresh = not self.has_stage(stage)
+        todo = inputs if fresh else self.resume_filter(inputs, stage, key=key)
+        if not fresh and todo.isEmpty():
+            return self.read_stage(stage), None
+        for s in invalidates:
+            self.invalidate_stage(s)
+        new = self._write(stage, df_fn(todo), "overwrite" if fresh else "append",
+                          t0, bytes_in_col, bytes_out_col)
+        return self.read_stage(stage), new
 
     def lineage(self) -> DataFrame:
         return self.spark.read.schema(LINEAGE).parquet(f"{self.root}/_lineage")
@@ -170,5 +171,6 @@ class CheckpointedRun:
         /root/reference/server/ocr_handler.cpp:157-205)."""
         if not self.has_stage(stage):
             return documents
-        done = self.read_stage(stage).select(key)
+        # the key's type comes from the inputs: no inference job
+        done = self.read_stage(stage, StructType([documents.schema[key]]))
         return documents.join(done, key, "left_anti")

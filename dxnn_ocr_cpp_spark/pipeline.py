@@ -162,13 +162,12 @@ def extract_checkpointed(spark, documents: DataFrame, root: str,
     """Stage-wise checkpointed extraction (north rule X15): stage 1+2
     snapshot the exploded scored-blocks table, stage 3 rebuilds spans
     from that checkpoint — a crash between stages resumes WITHOUT
-    re-parsing any html (the expensive stage).
+    re-parsing any html (the expensive stage). A resume parses only the
+    new docs and extends a valid `extracted` by their urls alone.
 
     Returns (extracted DataFrame materialized from the final
     checkpoint, CheckpointedRun handle for lineage inspection).
     """
-    from pyspark.sql import Window
-
     from dxnn_ocr_cpp_spark.lineage import CheckpointedRun
     from dxnn_ocr_cpp_spark.operators.emit import span_filter
 
@@ -182,45 +181,44 @@ def extract_checkpointed(spark, documents: DataFrame, root: str,
             "by policy")
 
     run = CheckpointedRun(spark, root, run_id=run_id)
+    # read before the blocks stage invalidates it: a valid `extracted`
+    # over blocks that are appended to, never rewritten, can be extended
+    extendable = run.has_stage("blocks") and run.has_stage("extracted")
 
-    # stage 1+2: parse + score, exploded for a columnar checkpoint.
-    # Resume semantics: only docs absent from the checkpoint are parsed
-    # and their blocks appended (the url universe survives even for
-    # block-less docs, F8: extract_blocks emits a null-block row per
-    # url, so resume sees them as done).
-    blocks, blocks_extended = run.run_incremental_stage(
+    # stage 1+2: parse + score, exploded for a columnar checkpoint. Only
+    # docs absent from the checkpoint are parsed and their blocks appended
+    # (F8: extract_blocks emits a null-block row per block-less url, so
+    # resume sees it as done). An append first invalidates `extracted`,
+    # so a crash before stage 3 completes ends in a full rebuild.
+    blocks, new_blocks = run.run_incremental_stage(
         "blocks", documents, lambda todo: extract_blocks(todo, cfg),
-        key="url", bytes_out_col="text",
-        invalidates=("extracted",))  # persisted staleness: a crash
-        # between the blocks append and the extracted rebuild must not
-        # leave an old extracted checkpoint being served
+        key="url", bytes_out_col="text", invalidates=("extracted",))
 
-    # stage 3: emission from the checkpoint — window re-sort replaces
-    # the array sort (the blocks left their row at the checkpoint
-    # boundary, so this path pays ONE shuffle by design; the
+    # stage 3: emission from the checkpoint — groupBy + array_sort
+    # replaces the in-row array sort (the blocks left their row at the
+    # checkpoint boundary, so this path pays ONE shuffle by design; the
     # non-checkpointed extract() path pays zero)
-    def build_extracted():
-        b = blocks
+    def build_extracted(b):
         # the SAME keep predicate as the hot path (span_filter over a
         # struct of the flat checkpoint columns) — a hand-copied filter
         # here could drift and break hot-vs-checkpointed byte-identity
         keep = F.col("block_id").isNotNull() & span_filter(
             F.struct(F.col("score"), F.col("n_text_chars"),
                      F.col("n_link_chars"), F.col("text")), cfg)
-        spans = (b.withColumn("_keep", keep)
-                 .withColumn("_k", F.when(F.col("_keep"), F.struct(
-                     F.col("pos"), F.col("depth"), F.col("block_id"),
-                     F.col("text"), F.col("score")))))
+        spans = b.withColumn("_k", F.when(keep, F.struct(
+            F.col("pos"), F.col("depth"), F.col("block_id"),
+            F.col("text"), F.col("score"))))
         agg = (spans.groupBy("url")
                .agg(F.array_sort(F.collect_list("_k")).alias("ks")))
         txt = F.array_join(F.transform(F.col("ks"), lambda s: s["text"]),
                            cfg.span_separator)
-        return agg.select(
-            "url", txt.alias("text"),
-            F.size("ks").cast("int").alias("n_spans"))
+        return agg.select("url", txt.alias("text"),
+                          F.size("ks").cast("int").alias("n_spans"))
 
-    # blocks_extended => any existing extracted checkpoint is stale
-    # (it was derived from fewer blocks) and must be rebuilt
-    extracted = run.run_stage("extracted", build_extracted,
-                              bytes_out_col="text", force=blocks_extended)
+    # stage 3 is per url and appended blocks are new urls: extend by the
+    # new blocks alone; else run_stage rebuilds it if marked stale
+    extend = extendable and new_blocks is not None
+    extracted = run.run_stage(
+        "extracted", lambda: build_extracted(new_blocks if extend else blocks),
+        bytes_out_col="text", append=extend)
     return extracted, run

@@ -383,7 +383,7 @@ class TestDeadlineCappedRounds:
         lo_fn, hi_fn = self._fake_workers()
         monkeypatch.setattr(
             bench, "_run_worker",
-            lambda cores, corpus: hi_fn(cores) if cores == 8
+            lambda cores, corpus, timeout: hi_fn(cores) if cores == 8
             else lo_fn(cores))
 
     def test_noisy_window_extends_without_deadline(self, monkeypatch):
@@ -404,6 +404,34 @@ class TestDeadlineCappedRounds:
         # against the 12 s estimated round cost
         assert len(out["efficiency_per_round"]) == 2
         assert out["host_window_unstable"]  # spread published as-is
+
+
+class TestLegTimeout:
+    def test_leg_timeout_is_the_window_cost_estimate(self, monkeypatch):
+        """Every scaling leg's subprocess gets its window's cost
+        estimate (25% headroom included) as its timeout, not a fixed
+        900 s."""
+        import subprocess as _sp
+        monkeypatch.setattr(
+            bench, "cpu_ceiling",
+            lambda lo, hi, with_steal=False:
+                (0.95, 0.0) if with_steal else 0.95)
+        monkeypatch.setattr(bench, "_proc_stat_steal", lambda: 0.0)
+        seen = []
+
+        def fake_run(cmd, **kw):
+            seen.append(kw["timeout"])
+            cores = int(cmd[cmd.index("--scaling-worker") + 1])
+            leg = {"cores": cores, "wall_sec": 5.0, "docs": 100,
+                   "docs_per_sec": 19.0 * cores}
+            return _sp.CompletedProcess(cmd, 0, json.dumps(leg) + "\n", "")
+
+        monkeypatch.setattr(bench.subprocess, "run", fake_run)
+        bench.run_scaling("/nonexistent", (2, 8), min_rounds=2,
+                          max_rounds=2)
+        want = bench._window_cost_estimate((2, 8), 2)
+        assert len(seen) == 5  # lo hi lo hi lo
+        assert seen == [want] * 5 and want != 900
 
 
 class TestCodeDigestClosure:

@@ -95,3 +95,114 @@ def test_resume_noop_when_complete(spark, docs, tmp_path):
               for r in run.lineage().select("run_id", "stage").distinct().collect()}
     assert ("second", "blocks") not in stages
     assert ("second", "extracted") not in stages
+
+
+def _texts(df):
+    return {r["url"]: (r["text"], r["n_spans"]) for r in df.collect()}
+
+
+def _extracted_rows_by_run(run):
+    return {r["run_id"]: r["rows"] for r in
+            run.lineage().filter(F.col("stage") == "extracted")
+            .groupBy("run_id").agg(F.sum("row_count").alias("rows")).collect()}
+
+
+def test_resume_parses_each_new_doc_once(spark, docs, tmp_path):
+    """df_fn(todo) is evaluated once per resumed row: lineage reads the
+    files the append wrote instead of re-running df_fn."""
+    from pyspark.sql.types import StringType
+
+    from dxnn_ocr_cpp_spark.lineage import CheckpointedRun
+
+    root = str(tmp_path / "r5")
+    parsed = spark.sparkContext.accumulator(0)
+
+    def parse(url):
+        parsed.add(1)
+        return url
+
+    parse_udf = F.udf(parse, StringType())
+
+    def df_fn(todo):
+        return todo.select(parse_udf("url").alias("url"))
+
+    half = docs.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == 0)
+    CheckpointedRun(spark, root, run_id="half").run_incremental_stage(
+        "stage", half, df_fn)
+    before = parsed.value
+    run = CheckpointedRun(spark, root, run_id="rest")
+    out, new = run.run_incremental_stage("stage", docs, df_fn)
+    n_new = docs.count() - half.count()
+    assert parsed.value - before == n_new
+    assert new.count() == n_new and out.count() == docs.count()
+
+
+def test_lineage_counts_each_url_once_across_resume(spark, docs, tmp_path):
+    """A fresh run over ~90% of the urls and a resume over all of them:
+    the resume extends `extracted` by the new urls only, so its lineage
+    sums to the url count and its hashes compose to the table's hash."""
+    root = str(tmp_path / "r6")
+    part = docs.filter(F.pmod(F.xxhash64("url"), F.lit(10)) != 0)
+    n, n_part = docs.count(), part.count()
+    assert 0 < n_part < n
+    extract_checkpointed(spark, part, root, run_id="fresh")
+    ext, run = extract_checkpointed(spark, docs, root, run_id="resume")
+    assert _texts(ext) == _texts(extract(docs))
+    assert _extracted_rows_by_run(run) == {"fresh": n_part, "resume": n - n_part}
+
+    from dxnn_ocr_cpp_spark.lineage import lineage_rows
+    xor = "bit_xor(content_hash)"
+    logged = run.lineage().filter(F.col("stage") == "extracted") \
+        .agg(F.expr(xor)).collect()[0][0]
+    assert logged == lineage_rows(ext, "x", "s").agg(F.expr(xor)).collect()[0][0]
+
+
+def test_crash_while_extending_extracted_rebuilds_it(spark, docs, tmp_path,
+                                                     monkeypatch):
+    """A crash in the `extracted` extension, after the blocks append and
+    with some of its part files already on disk: the rerun parses
+    nothing and rebuilds `extracted` in full, equal to extract()."""
+    import glob
+
+    from dxnn_ocr_cpp_spark.lineage import CheckpointedRun
+
+    root = str(tmp_path / "r7")
+    part = docs.filter(F.pmod(F.xxhash64("url"), F.lit(10)) != 0)
+    extract_checkpointed(spark, part, root, run_id="fresh")
+
+    run_stage = CheckpointedRun.run_stage
+
+    def torn(self, stage, df_fn, *a, append=False, **kw):
+        if append:
+            # a torn append: a few part files land, no _SUCCESS
+            tmp = str(tmp_path / "torn")
+            df_fn().limit(3).write.parquet(tmp)
+            for f in glob.glob(f"{tmp}/part-*"):
+                shutil.copy(f, self._stage_path(stage))
+            raise RuntimeError("crash while extending")
+        return run_stage(self, stage, df_fn, *a, append=append, **kw)
+
+    monkeypatch.setattr(CheckpointedRun, "run_stage", torn)
+    with pytest.raises(RuntimeError, match="crash while extending"):
+        extract_checkpointed(spark, docs, root, run_id="crashed")
+    monkeypatch.undo()
+
+    ext, run = extract_checkpointed(spark, docs, root, run_id="rerun")
+    assert ext.count() == docs.count()
+    assert _texts(ext) == _texts(extract(docs))
+    rerun = {r["stage"]: r["rows"] for r in
+             run.lineage().filter(F.col("run_id") == "rerun").groupBy("stage")
+             .agg(F.sum("row_count").alias("rows")).collect()}
+    assert rerun == {"extracted": docs.count()}
+
+
+def test_rewritten_blocks_rebuild_extracted(spark, docs, tmp_path):
+    """`extracted` is extended only over a blocks checkpoint that was
+    appended to: blocks rewritten from scratch rebuild it in full."""
+    root = str(tmp_path / "r8")
+    extract_checkpointed(spark, docs, root, run_id="first")
+    shutil.rmtree(f"{root}/blocks")
+    ext, run = extract_checkpointed(spark, docs, root, run_id="second")
+    assert ext.count() == docs.count()
+    assert _texts(ext) == _texts(extract(docs))
+    assert _extracted_rows_by_run(run)["second"] == docs.count()

@@ -106,3 +106,15 @@ class TestFrontierPlan:
         # one stage, so exactly ONE exchange sits above the parquet
         # scan's stage (the url dedup)
         assert "FileScan parquet" in plan
+
+
+def test_plans_md_has_a_row_per_query():
+    """BENCH/PLANS.md is the plan audit of every registered query: a
+    `queries()` key without a row means the audit is stale (regenerate
+    it with `python tools/plan_audit.py <sf_dir>`)."""
+    import pathlib
+
+    plans = pathlib.Path(entrymod.__file__).parent / "BENCH" / "PLANS.md"
+    rows = set(re.findall(r"^\| (\w+) \|", plans.read_text(), re.M))
+    missing = sorted(set(entrymod.queries()) - rows)
+    assert not missing, f"no BENCH/PLANS.md row for {missing}"

@@ -49,6 +49,9 @@ def main(argv):
             extracted.writeTo(out[len(_TABLE_PREFIX):]).createOrReplace()
         else:
             extracted.write.mode("overwrite").parquet(out)
+    # each write's lineage covers only the rows it added, so on a root
+    # that was only ever extended this is the stage's true row total
+    # (a full rebuild after a crash counts the rows it rewrote again)
     stats = run.lineage().groupBy("stage").sum("row_count").collect()
     print({r[0]: r[1] for r in stats})
     spark.stop()
