@@ -3134,8 +3134,9 @@ def q_task_config_mixed(spark, sf_dir):
     The scored-block array is PLANTED arithmetic (score / char counts
     are pure functions of (doc_id, block_id)), so the DuckDB oracle
     replays the whole emission stage: per-policy coalesce fallback to
-    run-level defaults, the 4-predicate keep filter, canonical
-    (pos, depth, block_id) ordering, re-index, and '\\n' concat.
+    run-level defaults, the 4-predicate keep filter, array order
+    (block_id order, as the segmenter emits it), re-index, and '\\n'
+    concat.
     Policies: doc_id%3==0 raises box_thresh to 0.75; ==1 raises
     rec_score_thresh to 0.65 and min_text_chars to 12; ==2 passes an
     all-NULL struct (pure fallback). Still zero shuffle, zero Python —
@@ -3154,8 +3155,6 @@ def q_task_config_mixed(spark, sf_dir):
     def block(j: int):
         return F.struct(
             F.lit(j).cast("int").alias("block_id"),
-            F.lit(j).cast("int").alias("pos"),
-            F.lit(j % 3).cast("int").alias("depth"),
             F.concat(F.lit(f"blk{j}_"), i.cast("string")).alias("text"),
             (((i * 7 + j * 13) % 100).cast("double") / 100.0)
             .alias("score"),
@@ -6237,8 +6236,8 @@ ORACLES["winnow_planted_recall"] = _planted_pair_sql(37, 5)
 
 # per-row task_cfg emission replay: same planted block arithmetic,
 # same coalesce-fallback thresholds (box 0.5 / rec 0.0 / min_chars 3 /
-# max link density 0.66 are DEFAULT_CONFIG values), same canonical
-# (pos, depth, block_id) = j ordering and '\n' concat
+# max link density 0.66 are DEFAULT_CONFIG values), same array order
+# (block_id = j) and '\n' concat
 ORACLES["task_config_mixed"] = """
 WITH blocks AS (
   SELECT d.doc_id AS doc_id, j.j AS j,

@@ -18,15 +18,15 @@ partitioning/parallelism):
     dedupe D13/D14, geometry.cpp:184-201) cannot occur by construction.
 
 Block model (the TextBox analog, /root/reference/include/common/types.hpp:13-53):
-  block_id   0-based emission ordinal (contour index analog)
+  block_id   0-based emission ordinal (contour index analog) and the
+             only order key: each block is a text run closed by the next
+             block boundary, so blocks are emitted in document order —
+             the (y, x) reading order of the reference's
+             src/pipeline/ocr_pipeline.cpp:180-200
   tag        the block-level tag owning the text run
   boiler     True if the block context sits at or under a boiler tag
              (config.boiler_ancestors) — inherited down the open-element
              stack, so it costs one lookup per element
-  depth      open-element depth at block start
-  pos        global start-tag counter at block start — the document-order
-             sort key (analog of (y, x) reading order,
-             /root/reference/src/pipeline/ocr_pipeline.cpp:180-200)
   text_raw   raw accumulated character data (un-normalized)
   n_text_chars / n_link_chars   stage-2 features
 """
@@ -122,8 +122,6 @@ class Block:
     block_id: int
     tag: str
     boiler: bool
-    depth: int
-    pos: int
     text_raw: str
     n_text_chars: int
     n_link_chars: int
@@ -151,7 +149,6 @@ class _Segmenter(HTMLParser):
         self.open: dict = {}
         self.skip_depth = 0
         self.link_depth = 0
-        self.pos = 0
         self.blocks: list = []
         self.n_candidates = 0
         # current run state
@@ -159,8 +156,6 @@ class _Segmenter(HTMLParser):
         self._link_chars = 0
         self._ctx_tag = "body"
         self._ctx_boiler = False
-        self._ctx_depth = 0
-        self._ctx_pos = 0
 
     # -- open-element stack --
     # skip_depth/link_depth are INVARIANTS of the open-element stack
@@ -226,8 +221,6 @@ class _Segmenter(HTMLParser):
                     block_id=len(self.blocks),
                     tag=self._ctx_tag,
                     boiler=self._ctx_boiler,
-                    depth=self._ctx_depth,
-                    pos=self._ctx_pos,
                     text_raw=text,
                     # non-ws char count at C speed; str.split() uses the
                     # same whitespace definition as str.isspace()
@@ -240,8 +233,6 @@ class _Segmenter(HTMLParser):
     def _new_ctx(self, tag: str) -> None:
         self._ctx_tag = tag
         self._ctx_boiler = self.stack[-1][1]
-        self._ctx_depth = len(self.stack) - 1
-        self._ctx_pos = self.pos
 
     def _reinherit_ctx(self) -> None:
         """After closing a block element, text that follows (the 'tail')
@@ -251,12 +242,9 @@ class _Segmenter(HTMLParser):
             self._new_ctx("body")
             return
         self._ctx_tag, self._ctx_boiler, _ = self.stack[block_i]
-        self._ctx_depth = block_i
-        self._ctx_pos = self.pos
 
     # -- HTMLParser hooks --
     def handle_starttag(self, tag, attrs):
-        self.pos += 1
         if tag in VOID_TAGS:
             if tag in SPACING_VOIDS and not self.skip_depth:
                 self._parts.append(" ")
@@ -277,7 +265,6 @@ class _Segmenter(HTMLParser):
 
     def handle_startendtag(self, tag, attrs):
         # <x/> — treat exactly like a void occurrence
-        self.pos += 1
         if tag in SPACING_VOIDS and not self.skip_depth:
             self._parts.append(" ")
 

@@ -22,6 +22,7 @@ import os
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -32,6 +33,12 @@ from dxnn_ocr_cpp_spark.schemas import LINEAGE
 def new_run_id() -> str:
     # uuid4 is fine here: run ids label runs, they never affect data
     return uuid.uuid4().hex[:16]
+
+
+def _data_files(path: str) -> set[str]:
+    # Spark's rule: names starting with _ or . are not data
+    return {f"{path}/{f}" for f in os.listdir(path) if f[0] not in "_."} \
+        if os.path.isdir(path) else set()
 
 
 def lineage_rows(df: DataFrame, run_id: str, stage: str,
@@ -68,7 +75,10 @@ class CheckpointedRun:
 
     Layout under `root`:
         <root>/<stage>/data/      parquet stage output
-        <root>/_lineage/          lineage rows (append, one dir per stage run)
+        <root>/_lineage/          lineage rows, one file per stage write: an
+                                  append adds a file, an overwrite replaces
+                                  the stage's files, so each stage's rows
+                                  count its checkpoint's rows once
     """
 
     def __init__(self, spark: SparkSession, root: str, run_id: str | None = None):
@@ -95,19 +105,26 @@ class CheckpointedRun:
         """Write one stage (overwrite or append), then its lineage from
         only the files this write added, read with the schema just written."""
         path = self._stage_path(stage)
-
-        def files():  # Spark's rule: names starting with _ or . are not data
-            return {f"{path}/{f}" for f in os.listdir(path) if f[0] not in "_."} \
-                if os.path.isdir(path) else set()
-        before = files() if mode == "append" else set()
+        before = _data_files(path) if mode == "append" else set()
         df.write.mode(mode).parquet(path)
         self._schemas[stage] = df.schema
         # an overwrite's files are all new: read the directory
-        added = sorted(files() - before) if mode == "append" else [path]
+        added = sorted(_data_files(path) - before) if mode == "append" else [path]
         new = self.spark.read.schema(df.schema).parquet(*added)
         lin = lineage_rows(new, self.run_id, stage, bytes_in_col, bytes_out_col) \
             .withColumn("wall_ms", F.lit((time.monotonic() - t0) * 1000.0))
-        lin.coalesce(1).write.mode("append").parquet(f"{self.root}/_lineage")
+        # an overwrite replaces the stage's lineage: once the new file is
+        # written, drop the earlier writes' files (each holds one stage)
+        lineage = f"{self.root}/_lineage"
+        stale = [f for f in _data_files(lineage) if stage in
+                 pq.read_table(f, columns=["stage"])["stage"].to_pylist()] \
+            if mode == "overwrite" else []
+        lin.coalesce(1).write.mode("append").parquet(lineage)
+        for f in stale:  # and the checksum file Hadoop writes beside it
+            d, name = os.path.split(f)
+            for p in (f, f"{d}/.{name}.crc"):
+                if os.path.exists(p):
+                    os.remove(p)
         return new
 
     def run_stage(self, stage: str, df_fn, bytes_in_col: str | None = None,

@@ -2,12 +2,12 @@
 
 The reference's finalize step filters by confidence, sorts boxes in
 reading order, re-indexes, and emits the per-document result
-(/root/reference/src/pipeline/ocr_pipeline.cpp:687-734). Our blocks are
-already in document order (the stage-1 stream parser emits in DOM
-order, a total order — the (y,x)+epsilon bubble refinement of
-compareOCRResults, ocr_pipeline.cpp:180-200, degenerates to a no-op),
-but we still array_sort on the canonical key (pos, depth, block_id) so
-the output order is independent of any upstream reordering.
+(src/pipeline/ocr_pipeline.cpp:687-734). Our blocks arrive in reading
+order: the stage-1 stream parser emits them in DOM order, a total
+order, so the (y,x)+epsilon bubble refinement of compareOCRResults
+(ocr_pipeline.cpp:180-200) has nothing to do. Emission is filter then
+transform over the array as it arrives — an array keeps its order, so
+there is no sort and no sort key.
 
 All expressions, zero shuffle: the per-document fan-in barrier the
 reference builds from atomics (RecognitionTaskContext.pendingCount,
@@ -50,25 +50,12 @@ def with_spans(df, cfg: ExtractionConfig = DEFAULT_CONFIG,
                task_col: str | None = None):
     task = F.col(task_col) if task_col else None
     kept = F.filter(F.col(scored_col), lambda b: span_filter(b, cfg, task))
-    # canonical order: (pos, depth, block_id) — struct comparison is
-    # field-order lexicographic, so put sort keys first, then re-index.
-    ordered = F.array_sort(F.transform(
-        kept,
-        lambda b: F.struct(
-            b["pos"].alias("pos"),
-            b["depth"].alias("depth"),
-            b["block_id"].alias("block_id"),
-            b["text"].alias("text"),
-            b["score"].alias("score"),
-        ),
-    ))
     spans = F.transform(
-        ordered,
+        kept,
         lambda b, i: F.struct(
             i.cast("int").alias("span_index"),   # re-index, O2 analog
             b["text"].alias("text"),
             b["score"].alias("score"),
-            b["pos"].alias("pos"),
         ),
     )
     return df.withColumn(out_col, spans)
@@ -97,7 +84,7 @@ def with_final_text(df, cfg: ExtractionConfig = DEFAULT_CONFIG,
 #   h1..h6      -> '#'*level + ' ' + text
 #   li          -> '- ' + text       (list nesting flattened: the
 #                                     segmenter's block is the <li>
-#                                     context, depth is not re-derived)
+#                                     context, nesting is not kept)
 #   blockquote  -> '> ' + text       (block text is single-line by
 #                                     construction: normalize_text
 #                                     collapsed whitespace upstream)
@@ -154,22 +141,10 @@ def with_markdown(df, cfg: ExtractionConfig = DEFAULT_CONFIG,
                   scored_col: str = "scored", out_col: str = "markdown",
                   task_col: str | None = None):
     """scored blocks -> markdown document string. Same keep predicate
-    and canonical (pos, depth, block_id) ordering as with_spans — the
-    two renderings can never disagree about WHICH text survived, only
-    how it is decorated. Zero shuffle, zero Python; empty span set ->
-    '' (F8)."""
+    and the same array order as with_spans — the two renderings can
+    never disagree about WHICH text survived, only how it is decorated.
+    Zero shuffle, zero Python; empty span set -> '' (F8)."""
     task = F.col(task_col) if task_col else None
     kept = F.filter(F.col(scored_col), lambda b: span_filter(b, cfg, task))
-    ordered = F.array_sort(F.transform(
-        kept,
-        lambda b: F.struct(
-            b["pos"].alias("pos"),
-            b["depth"].alias("depth"),
-            b["block_id"].alias("block_id"),
-            b["tag"].alias("tag"),
-            b["text"].alias("text"),
-        ),
-    ))
-    lines = F.transform(ordered,
-                        lambda b: markdown_block(b["tag"], b["text"]))
+    lines = F.transform(kept, lambda b: markdown_block(b["tag"], b["text"]))
     return df.withColumn(out_col, F.array_join(lines, "\n\n"))

@@ -49,8 +49,6 @@ def segment_one(raw: bytes | None, cfg: ExtractionConfig,
             "block_id": b.block_id,
             "tag": b.tag,
             "boiler": b.boiler,
-            "depth": b.depth,
-            "pos": b.pos,
             "text": t,
             "n_text_chars": n_text,
             "n_link_chars": min(b.n_link_chars, n_text),

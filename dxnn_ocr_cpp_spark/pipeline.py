@@ -8,7 +8,7 @@ column transformations with exactly one Python boundary:
     documents (url, html)
       -> seg     = segment_udf(html)          # stage 1, pandas UDF
       -> scored  = transform(seg.blocks, +score)   # stage 2, Catalyst
-      -> spans   = sort(filter(scored))       # stage 3, Catalyst
+      -> spans   = filter(scored)             # stage 3, Catalyst
       -> text    = array_join(spans.text)     # finalize
 
 Zero shuffles end-to-end: the per-doc barrier the reference hand-rolls
@@ -141,15 +141,13 @@ def extract_python(url: str, html: bytes | None,
                 and score >= thresh("rec_score_thresh")
                 and b["n_text_chars"] >= thresh("min_text_chars")
                 and ld <= thresh("max_link_density") and b["text"]):
-            spans.append((b["pos"], b["depth"], b["block_id"], b["text"],
-                          score, b["tag"]))
-    spans.sort()
+            spans.append(b)
     from dxnn_ocr_cpp_spark.operators.emit import markdown_block_py
     return {
         "url": url,
-        "text": cfg.span_separator.join(s[3] for s in spans),
-        "markdown": "\n\n".join(markdown_block_py(s[5], s[3])
-                                for s in spans),
+        "text": cfg.span_separator.join(b["text"] for b in spans),
+        "markdown": "\n\n".join(markdown_block_py(b["tag"], b["text"])
+                                for b in spans),
         "n_spans": len(spans),
         "n_candidates": seg["n_candidates"],
         "charset": seg["charset"],
@@ -194,10 +192,11 @@ def extract_checkpointed(spark, documents: DataFrame, root: str,
         "blocks", documents, lambda todo: extract_blocks(todo, cfg),
         key="url", bytes_out_col="text", invalidates=("extracted",))
 
-    # stage 3: emission from the checkpoint — groupBy + array_sort
-    # replaces the in-row array sort (the blocks left their row at the
-    # checkpoint boundary, so this path pays ONE shuffle by design; the
-    # non-checkpointed extract() path pays zero)
+    # stage 3: emission from the checkpoint — the blocks left their row
+    # at the checkpoint boundary, so this path pays ONE shuffle by design
+    # (the non-checkpointed extract() path pays zero). collect_list after
+    # the shuffle loses the array order, so the one sort here restores it
+    # by block_id, unique per url.
     def build_extracted(b):
         # the SAME keep predicate as the hot path (span_filter over a
         # struct of the flat checkpoint columns) — a hand-copied filter
@@ -206,8 +205,7 @@ def extract_checkpointed(spark, documents: DataFrame, root: str,
             F.struct(F.col("score"), F.col("n_text_chars"),
                      F.col("n_link_chars"), F.col("text")), cfg)
         spans = b.withColumn("_k", F.when(keep, F.struct(
-            F.col("pos"), F.col("depth"), F.col("block_id"),
-            F.col("text"), F.col("score"))))
+            F.col("block_id"), F.col("text"))))
         agg = (spans.groupBy("url")
                .agg(F.array_sort(F.collect_list("_k")).alias("ks")))
         txt = F.array_join(F.transform(F.col("ks"), lambda s: s["text"]),

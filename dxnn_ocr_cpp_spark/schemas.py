@@ -31,13 +31,12 @@ TASK_CONFIG = T.StructType([
 
 # per-candidate block (TextBox analog, types.hpp:13-53). `text` is
 # already normalized by htmlseg.normalize_text — normalization happens
-# exactly once, inside the stage-1 UDF.
+# exactly once, inside the stage-1 UDF. A doc's blocks array is in
+# reading order, and block_id ascends along it.
 BLOCK = T.StructType([
     T.StructField("block_id", T.IntegerType(), False),
     T.StructField("tag", T.StringType(), False),
     T.StructField("boiler", T.BooleanType(), False),
-    T.StructField("depth", T.IntegerType(), False),
-    T.StructField("pos", T.IntegerType(), False),
     T.StructField("text", T.StringType(), False),
     T.StructField("n_text_chars", T.IntegerType(), False),
     T.StructField("n_link_chars", T.IntegerType(), False),

@@ -194,6 +194,8 @@ def test_crash_while_extending_extracted_rebuilds_it(spark, docs, tmp_path,
              run.lineage().filter(F.col("run_id") == "rerun").groupBy("stage")
              .agg(F.sum("row_count").alias("rows")).collect()}
     assert rerun == {"extracted": docs.count()}
+    # the rebuild replaced the fresh run's `extracted` lineage
+    assert sum(_extracted_rows_by_run(run).values()) == ext.count()
 
 
 def test_rewritten_blocks_rebuild_extracted(spark, docs, tmp_path):
@@ -206,3 +208,40 @@ def test_rewritten_blocks_rebuild_extracted(spark, docs, tmp_path):
     assert ext.count() == docs.count()
     assert _texts(ext) == _texts(extract(docs))
     assert _extracted_rows_by_run(run)["second"] == docs.count()
+
+
+def test_root_with_older_blocks_schema_resumes(spark, docs, tmp_path):
+    """A root whose `blocks` checkpoint still carries the older `depth`
+    and `pos` columns resumes over more urls, by extending `extracted`
+    and by rebuilding it, and each time reads as extract()."""
+    from dxnn_ocr_cpp_spark.lineage import CheckpointedRun
+    from dxnn_ocr_cpp_spark.pipeline import extract_blocks
+
+    root = str(tmp_path / "r9")
+    part = docs.filter(F.pmod(F.xxhash64("url"), F.lit(10)) != 0)
+    n, n_part = docs.count(), part.count()
+
+    def older_blocks(todo):
+        # the older column order; `pos` runs against block_id, so a
+        # stage 3 that still sorted by it would reverse every page
+        return extract_blocks(todo).select(
+            "url", "block_id", "tag", "boiler", F.lit(0).alias("depth"),
+            (-F.col("block_id")).alias("pos"), "text", "n_text_chars",
+            "n_link_chars", "score")
+
+    old = CheckpointedRun(spark, root, run_id="old")
+    old.run_incremental_stage("blocks", part, older_blocks,
+                              bytes_out_col="text")
+    old.run_stage("extracted",
+                  lambda: extract(part).select("url", "text", "n_spans"),
+                  bytes_out_col="text")
+    assert {"depth", "pos"} <= set(old.read_stage("blocks").columns)
+
+    ext, run = extract_checkpointed(spark, docs, root, run_id="extend")
+    assert _texts(ext) == _texts(extract(docs))
+    assert _extracted_rows_by_run(run) == {"old": n_part, "extend": n - n_part}
+
+    run.invalidate_stage("extracted")
+    ext, run = extract_checkpointed(spark, docs, root, run_id="rebuild")
+    assert _texts(ext) == _texts(extract(docs))
+    assert _extracted_rows_by_run(run) == {"rebuild": n}

@@ -143,6 +143,32 @@ class TestSlimBlocks:
         assert "boiler" in fields
 
 
+class TestReadingOrder:
+    def test_tail_after_nested_block_reads_in_document_order(self, spark,
+                                                              tmp_path):
+        """Text after a nested block follows that block on every path:
+        the blocks array is in reading order and nothing re-sorts it."""
+        from dxnn_ocr_cpp_spark.pipeline import extract_checkpointed
+        from dxnn_ocr_cpp_spark.schemas import DOCUMENTS
+
+        html = (b"<section>First sentence here.<p>Second sentence here.</p>"
+                b"Third sentence here and it goes on.</section>")
+        lines = ["First sentence here.", "Second sentence here.",
+                 "Third sentence here and it goes on."]
+        df = spark.createDataFrame([("u", None, html, None, None)], DOCUMENTS)
+        py = extract_python("u", html)
+        hot = extract(df, markdown=True).collect()[0]
+        ckpt = extract_checkpointed(spark, df, str(tmp_path / "ck"))[0] \
+            .collect()[0]
+        for path, text in (("extract_python", py["text"]),
+                           ("extract", hot["text"]),
+                           ("extract_checkpointed", ckpt["text"])):
+            assert text.split("\n") == lines, path
+        for path, md in (("extract_python", py["markdown"]),
+                         ("extract", hot["markdown"])):
+            assert md.split("\n\n") == lines, path
+
+
 class TestBlocksView:
     def test_exploded_blocks_match_array_path(self, spark, docs):
         nb = extract_blocks(docs).filter("block_id is not null").count()

@@ -36,6 +36,11 @@ class TestExtractionPlan:
         evals = plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
         assert evals == 1, f"expected exactly 1 Python hop, plan:\n{plan[:2000]}"
 
+    def test_no_array_sort(self, spark):
+        """Blocks arrive in reading order: emission sorts nothing."""
+        df = extract(generate_documents_df(spark, 20), markdown=True)
+        assert "array_sort" not in optimized_of(df)
+
     def test_scan_pruned_to_url_html(self, spark):
         path = "/tmp/_plan_prune_docs"
         generate_documents_df(spark, 5).write.mode("overwrite").parquet(path)

@@ -6,9 +6,9 @@ side by side as a static HTML page per document).
 Usage:
     python tools/dump_blocks.py [--n 5] [--out /tmp/block_dump]
 
-Renders the first N corpus documents: every candidate block with its
-depth, boiler marker, score, link density, and whether the span filter
-kept it — the heuristic-tuning feedback loop (why did this block
+Renders the first N corpus documents: every candidate block, in
+reading order, with its boiler marker, score, link density, and whether
+the span filter kept it — the heuristic-tuning feedback loop (why did this block
 drop?). Debug tool only: collects N documents to the driver by design;
 never part of the hot path.
 """
@@ -66,7 +66,7 @@ def render_doc(url: str, blocks: list, cfg) -> str:
             f"<div class='block {cls}'>"
             f"<div class='meta'>#{b['block_id']} "
             f"&lt;{html_mod.escape(b['tag'])}&gt; "
-            f"depth={b['depth']}{' boiler' if b['boiler'] else ''} "
+            f"{'boiler ' if b['boiler'] else ''}"
             f"<span class='score'>score={b['score']:.3f}</span> "
             f"chars={b['n_text_chars']} link_density={ld:.2f}{reason}</div>"
             f"{html_mod.escape(b['text'])}</div>")
@@ -99,8 +99,7 @@ def main() -> None:
     outdir = pathlib.Path(args.out)
     outdir.mkdir(parents=True, exist_ok=True)
     for i, (url, blocks) in enumerate(sorted(by_url.items())):
-        blocks.sort(key=lambda b: (b["pos"] or 0, b["depth"] or 0,
-                                   b["block_id"] or 0))
+        blocks.sort(key=lambda b: b["block_id"] or 0)
         p = outdir / f"doc_{i:03d}.html"
         p.write_text(render_doc(url, blocks, DEFAULT_CONFIG),
                      encoding="utf-8")

@@ -22,11 +22,13 @@ thresholds); at sf0.001 those are sub-second.
 
 Usage: python tools/plan_audit.py [sf_dir]
 """
+import pathlib
 import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 PY_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
             "FlatMapGroupsInPandas", "AggregateInPandas")
@@ -119,7 +121,7 @@ def main():
         f"{sorted(r['exchanges'] for r in rows)[len(rows) // 2]}.",
         "",
     ]
-    out = "BENCH/PLANS.md"
+    out = REPO / "BENCH" / "PLANS.md"
     with open(out, "w") as f:
         f.write("\n".join(lines))
     print(f"wrote {out}: {len(rows)} queries, "
