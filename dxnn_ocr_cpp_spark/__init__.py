@@ -20,7 +20,23 @@ column expressions over an array column, so a full extraction run does
 zero shuffles.
 """
 
+import sys
+
 from dxnn_ocr_cpp_spark.config import ExtractionConfig
+
+
+def _in_python_worker() -> bool:
+    # `setup_spark_files` sets the flag before the task's UDF, and with it
+    # this package, is unpickled; the driver never sets it
+    files = sys.modules.get("pyspark.core.files")
+    return bool(files and getattr(files.SparkFiles, "_is_running_on_worker", False))
+
+
+# stop every later task of this worker re-reading pyspark.zip's directory
+if _in_python_worker():
+    from dxnn_ocr_cpp_spark import worker
+
+    worker.install()
 
 __all__ = ["ExtractionConfig"]
 __version__ = "0.1.0"

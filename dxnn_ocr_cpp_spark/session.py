@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_session(app: str = "dxnn_ocr_cpp_spark",
                   master: str | None = None,
@@ -31,10 +33,17 @@ def build_session(app: str = "dxnn_ocr_cpp_spark",
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or \
         f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     cores = 32
+    b = SparkSession.builder.master(master).appName(app)
     if master.startswith("local["):
-        inner = master[6:-1]
+        # local[N] or local[N,F] (F = task retries); N may be *
+        inner = master[6:-1].split(",")[0]
         cores = os.cpu_count() if inner == "*" else int(inner)
-    b = (SparkSession.builder.master(master).appName(app)
+        # Python workers do not see the driver's sys.path: put the
+        # package's parent first on theirs, so a tool started from any
+        # directory runs its UDFs (extra_conf may still override)
+        b = b.config("spark.executorEnv.PYTHONPATH", os.pathsep.join(
+            p for p in (_PACKAGE_PARENT, os.environ.get("PYTHONPATH")) if p))
+    b = (b
          .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(cores, 8)))
          .config("spark.sql.adaptive.enabled", "true")
          .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
