@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from dxnn_ocr_cpp_spark.config import DEFAULT_CONFIG, ExtractionConfig
-from dxnn_ocr_cpp_spark.htmlseg import normalize_text, segment_html
+from dxnn_ocr_cpp_spark.htmlseg import segment_html
 from dxnn_ocr_cpp_spark.schemas import SEGMENT_RESULT
 
 
@@ -27,34 +27,17 @@ def segment_one(raw: bytes | None, cfg: ExtractionConfig,
                 slim: bool = False) -> dict:
     """Per-document segmentation -> plain dict matching SEGMENT_RESULT.
     Exposed separately so unit tests and goldens exercise the exact
-    production code path without a JVM."""
+    production code path without a JVM. The block dicts are built by
+    htmlseg.segment_tokens itself: text normalized, blocks that
+    normalize to empty dropped (D1 analog), and n_text_chars/
+    n_link_chars counted on the normalized text the block emits (raw
+    counts would let zero-width-padded blocks past min_text_chars)."""
     # `slim` is ignored: perfbench/layers.py still passes it
     res = segment_html(raw, cfg.max_candidates, cfg.max_html_bytes,
                        cfg.sniff_bytes, engine=cfg.parser_engine,
-                       boiler_tags=cfg.boiler_ancestors)
-    blocks = []
-    for b in res.blocks:
-        t = normalize_text(b.text_raw)
-        if not t:
-            continue  # D1 analog: candidacy requires text after normalization
-        # counts describe the NORMALIZED text the block emits — raw
-        # counts included zero-width/bidi chars that normalization
-        # strips, letting soup-padded blocks past min_text_chars and
-        # skewing density features against the actual output
-        # normalize_text collapses every whitespace run to one ASCII
-        # space, so non-ws chars = len - spaces (== sum of split lens,
-        # without the list allocation)
-        n_text = len(t) - t.count(" ")
-        blocks.append({
-            "block_id": b.block_id,
-            "tag": b.tag,
-            "boiler": b.boiler,
-            "text": t,
-            "n_text_chars": n_text,
-            "n_link_chars": min(b.n_link_chars, n_text),
-        })
+                       boiler_tags=cfg.boiler_ancestors, normalized=True)
     return {
-        "blocks": blocks,
+        "blocks": res.blocks,
         "n_candidates": res.n_candidates,
         "truncated": res.truncated,
         "charset": res.charset,

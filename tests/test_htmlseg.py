@@ -202,8 +202,10 @@ class TestImplicitCloseReconciliation:
 
 
 class TestBoundedCost:
-    """Hostile nesting costs linear time: stray closers and the
-    implied-</head> checks never scan the open-element stack."""
+    """Every input costs time linear in its size. Hostile nesting: stray
+    closers and the implied-</head> checks never scan the open-element
+    stack. Unclosed constructs: a closer found missing once is never
+    searched for again (html.parser re-scans to EOF at every '<')."""
 
     @pytest.mark.parametrize("html", [
         b"<div>" * 16384 + b"</span>" * 16384 + b"<p>end</p>",
@@ -217,3 +219,54 @@ class TestBoundedCost:
             blocks[eng] = segment_html(html, engine=eng).blocks
             assert time.perf_counter() - t0 < 1.0, eng
         assert blocks["fast"] == blocks["ref"]
+
+    @staticmethod
+    def _family_page(unit: str, size: int) -> bytes:
+        return ("<body><p>x</p>" + unit * (size // len(unit))).encode()
+
+    @pytest.mark.parametrize("unit", [
+        "<!--a", "</a ", "<?x ", "<![if ", "<script>", "<!--",
+    ], ids=["comment", "endtag", "pi", "marked-section", "script-k",
+            "comment-k"])
+    def test_unclosed_family_is_linear_and_engines_agree(self, unit):
+        import time
+        small = self._family_page(unit, 4096)
+        assert segment_html(small, engine="fast") == \
+            segment_html(small, engine="ref")
+        # best of five, sizes interleaved so host drift hits both
+        best = {100_000: float("inf"), 200_000: float("inf")}
+        for _ in range(5):
+            for size in best:
+                page = self._family_page(unit, size)
+                t0 = time.perf_counter()
+                segment_html(page)
+                best[size] = min(best[size], time.perf_counter() - t0)
+        assert best[200_000] < 1.5, best
+        # quadratic reads ~4 per doubling; slack for timer noise on
+        # the few-ms script case
+        assert best[200_000] <= 2.5 * best[100_000] + 0.002, best
+
+    def test_memory_on_a_crawl_page(self):
+        """tracemalloc peak of segment_one on ~1 MB of concatenated
+        corpus pages: ≤ 2x the 3,149,103 B the callback-driven segmenter
+        peaked at (tokens stream; they never sit in a list)."""
+        import tracemalloc
+
+        from dxnn_ocr_cpp_spark.config import DEFAULT_CONFIG
+        from dxnn_ocr_cpp_spark.corpus import make_document
+        from dxnn_ocr_cpp_spark.operators.segment import segment_one
+        parts, size, i = [], 0, 0
+        while size < 1 << 20:
+            h = make_document(i)["html"]
+            i += 1
+            if len(h) <= 100_000:  # not the 2 MB edge page
+                parts.append(h)
+                size += len(h)
+        page = b"".join(parts)
+        tracemalloc.start()
+        try:
+            segment_one(page, DEFAULT_CONFIG)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak <= 2 * 3_149_103, peak

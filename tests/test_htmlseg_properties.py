@@ -8,7 +8,9 @@ Invariants fuzzed:
   * block text accounting: every block has non-whitespace raw text and
     consistent n_text_chars;
   * candidate cap is never exceeded;
-  * blocks come out in document order, on both engines.
+  * blocks come out in document order, on both engines;
+  * the fast tokenizer's token stream equals html.parser's;
+  * normalize_text equals its former two-regex definition.
 """
 
 import re
@@ -16,7 +18,7 @@ import re
 from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 
-from dxnn_ocr_cpp_spark.htmlseg import normalize_text, segment_html
+from dxnn_ocr_cpp_spark.htmlseg import normalize_text, segment_html, tokenize
 
 # HTML-ish soup: tags (balanced or not), entities, text, junk bytes
 tag = st.sampled_from(
@@ -87,6 +89,15 @@ hostile = st.one_of(
         "<script>no close", "</ p>", "</p attr>", "<3", "< div>", "<À",
         "<![CDATA[x ] ]>", "<![foo]]>", "<![cdata[x > y]]>", "<![ ",
         "<![if mso]>", "<![endif]>", "<![rcdata j ]  ]  >",
+        # shapes the fast token regex claims, and their near misses
+        "<a href=x/y>", "<a href=/x/ >", "<x a=b/>", "<x a=b />",
+        "<x a=/>", "<a t='x>y'>", '<a t="x<y">', "<a t='<'>",
+        "<SCRIPT>", "<Style x=y>", "<script/>", "<script />",
+        "<script/x>", "</script x>", "</SCRIPT >", "</ſcript>",
+        "<style>unclosed", "<!-- unclosed", "<!--x-- >", "<!-->",
+        "<a b\"c=d>", "<a 'b'=c>", "<a b=c=d>", "<a ==b>", "<a b==c>",
+        "<a b='c'd>", "<x a= >", "<a\x0bb>", "<x\x00>", "<x/y>",
+        "<!x>", "<!>", "<?>", "<!-x>",
     ]),
 )
 hostile_soup = st.lists(hostile, max_size=40).map("".join)
@@ -98,6 +109,14 @@ def test_fast_engine_matches_reference_engine(s):
     raw = s.encode("utf-8", "surrogatepass")
     assert _key(segment_html(raw, engine="fast")) == \
         _key(segment_html(raw, engine="ref"))
+
+
+@settings(max_examples=400, deadline=None)
+@given(hostile_soup)
+def test_fast_tokens_match_reference_tokens(s):
+    """Token for token, not only block for block: data chunks, tag
+    names and '<x/>' forms all agree with html.parser."""
+    assert list(tokenize(s, "fast")) == tokenize(s, "ref")
 
 
 def test_fast_engine_matches_reference_on_corpus():
@@ -125,3 +144,31 @@ def test_blocks_come_out_in_document_order(items):
         text = " ".join(b.text_raw for b in segment_html(raw, engine=engine).blocks)
         seen = [int(m) for m in re.findall(r"zqm(\d+)q", text)]
         assert seen == sorted(set(seen)), (engine, seen)
+
+
+# the two-regex normalize_text this module had before normalization
+# moved into the segmenter's block flush: the oracle for the one-split
+# definition
+_OLD_CTRL_RE = re.compile(
+    "[\u0000-\u0008\u000b\u000c\u000e-\u001f\u007f-\u009f"
+    "\u200b-\u200f\u202a-\u202e\u2060-\u2064\ufeff\u00ad]")
+_OLD_WS_RE = re.compile("[\\s\u00a0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]+")
+
+
+def _old_normalize_text(s):
+    return _OLD_WS_RE.sub(" ", _OLD_CTRL_RE.sub("", s)).strip()
+
+
+# C0/C1 (\x1c-\x1f and \x85 are whitespace to str.split and deleted
+# by the control class), zero-width, bidi, BOM/SHY and Unicode spaces
+_ODD_CHARS = st.sampled_from(
+    [chr(c) for c in range(0x00, 0x21)] + [chr(c) for c in range(0x7f, 0xa1)]
+    + list("\u00ad\u1680\u180e\u2000\u2001\u2007\u200a\u200b\u200c"
+           "\u200d\u200e\u200f\u2028\u2029\u202a\u202e\u202f\u205f"
+           "\u2060\u2064\u2065\u3000\ufeff\ufffd"))
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.lists(st.one_of(st.text(max_size=8), _ODD_CHARS), max_size=40).map("".join))
+def test_normalize_matches_two_regex_form(s):
+    assert normalize_text(s) == _old_normalize_text(s)
