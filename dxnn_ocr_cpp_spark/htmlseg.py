@@ -376,10 +376,10 @@ def tokenize(text: str, engine: str = "fast"):
 
 
 def _close(stack: list, open_: dict, tag: str, skip: int, link: int):
-    # pop to the nearest open `tag` below the top of the stack: every
+    # pop to the nearest open `tag`, searching down from the top: every
     # element above it closes implicitly. Returns the skip and link
     # depths less the elements closed, so both stay stack invariants.
-    i = len(stack) - 2
+    i = len(stack) - 1
     while stack[i][0] != tag:
         i -= 1
     for t, _, _ in stack[i:]:

@@ -210,7 +210,10 @@ class TestBoundedCost:
     @pytest.mark.parametrize("html", [
         b"<div>" * 16384 + b"</span>" * 16384 + b"<p>end</p>",
         b"<body><svg>" + b"<div>" * 16384 + b"<p>end</p>",
-    ], ids=["stray-closers", "skip-nesting"])
+        b"<div>" * 16384 + b"<head>x" * 16384,
+        b"<div>" * 16384 + b"<head><p>y</p>" * 8192,
+    ], ids=["stray-closers", "skip-nesting", "implied-head-end-data",
+            "implied-head-end-start"])
     def test_deep_nesting_is_fast_and_engines_agree(self, html):
         import time
         blocks = {}
