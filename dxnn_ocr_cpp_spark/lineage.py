@@ -23,7 +23,7 @@ import time
 import uuid
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -42,9 +42,13 @@ def _data_files(path: str) -> set[str]:
 
 
 def lineage_rows(df: DataFrame, run_id: str, stage: str,
-                 bytes_in_col: str | None = None,
-                 bytes_out_col: str | None = None) -> DataFrame:
+                 bytes_in_col: str | Column | None = None,
+                 bytes_out_col: str | Column | None = None) -> DataFrame:
     """Per-partition lineage from a (materialized) stage output."""
+    def total(c):  # a column name sums its lengths; a Column, its values
+        return F.lit(None).cast("long") if c is None else \
+            F.sum(F.length(F.col(c)) if isinstance(c, str) else c)
+
     hash_all = F.xxhash64(*[F.col(c) for c in df.columns])
     agg = (df
            .withColumn("_pid", F.spark_partition_id())
@@ -52,10 +56,8 @@ def lineage_rows(df: DataFrame, run_id: str, stage: str,
            .groupBy("_pid")
            .agg(
                F.count(F.lit(1)).alias("row_count"),
-               (F.sum(F.length(F.col(bytes_in_col))) if bytes_in_col
-                else F.lit(None).cast("long")).alias("bytes_in"),
-               (F.sum(F.length(F.col(bytes_out_col))) if bytes_out_col
-                else F.lit(None).cast("long")).alias("bytes_out"),
+               total(bytes_in_col).alias("bytes_in"),
+               total(bytes_out_col).alias("bytes_out"),
                F.expr("bit_xor(_h)").alias("content_hash"),
            ))
     return agg.select(
@@ -94,6 +96,11 @@ class CheckpointedRun:
         # parquet write is atomic-ish via _SUCCESS marker
         return os.path.exists(os.path.join(self._stage_path(stage), "_SUCCESS"))
 
+    def stage_columns(self, stage: str) -> list[str]:
+        """Top-level columns of a valid stage checkpoint, read from a footer."""
+        files = sorted(_data_files(self._stage_path(stage)))
+        return pq.read_schema(files[0]).names if files and self.has_stage(stage) else []
+
     def read_stage(self, stage: str, schema: StructType | None = None) -> DataFrame:
         # a known schema (given, or written here) skips an inference job
         schema = schema or self._schemas.get(stage)
@@ -101,7 +108,7 @@ class CheckpointedRun:
         return reader.parquet(self._stage_path(stage))
 
     def _write(self, stage: str, df: DataFrame, mode: str, t0: float,
-               bytes_in_col: str | None, bytes_out_col: str | None) -> DataFrame:
+               bytes_in_col, bytes_out_col) -> DataFrame:
         """Write one stage (overwrite or append), then its lineage from
         only the files this write added, read with the schema just written."""
         path = self._stage_path(stage)
@@ -127,9 +134,8 @@ class CheckpointedRun:
                     os.remove(p)
         return new
 
-    def run_stage(self, stage: str, df_fn, bytes_in_col: str | None = None,
-                  bytes_out_col: str | None = None,
-                  append: bool = False) -> DataFrame:
+    def run_stage(self, stage: str, df_fn, bytes_in_col=None,
+                  bytes_out_col=None, append: bool = False) -> DataFrame:
         """Execute-or-resume one stage: lazy `df_fn()` overwrites the
         checkpoint when it is absent or marked stale, or is appended to it
         when `append` says it holds rows the checkpoint lacks."""
@@ -148,24 +154,22 @@ class CheckpointedRun:
 
     def run_incremental_stage(self, stage: str, inputs: DataFrame, df_fn,
                               key: str = "url",
-                              bytes_in_col: str | None = None,
-                              bytes_out_col: str | None = None,
+                              bytes_in_col=None, bytes_out_col=None,
                               invalidates: tuple = ()):
         """Execute-or-extend one keyed stage: inputs already present in
         the checkpoint are skipped (anti-join on `key`); the rest are
-        processed and APPENDED. This is the real per-doc resume — a
-        prior run that completed over a subset of the corpus (or a
-        re-submission with new documents) only pays for the missing
-        keys: df_fn(todo) runs once, so resume cost is proportional to
-        the increment. Returns (stage DataFrame, rows written or None).
+        processed and APPENDED: a run over a subset of the corpus, or a
+        re-submission with new documents, pays for the missing keys only
+        (df_fn(todo) runs once). Returns (stage DataFrame, rows written
+        or None).
 
         `invalidates` lists DERIVED stage checkpoints; their _SUCCESS
         markers are removed on disk BEFORE this stage is extended, so a
         crash between the append and the derived rebuild leaves them
         marked stale (rebuilt next run) instead of silently served.
 
-        df_fn(todo) must emit >=1 row per input key (F8: block-less
-        docs still get a null-block row) or resume would re-do them.
+        df_fn(todo) must emit a row for every input key, or resume
+        would re-do the keys it left out.
         """
         t0 = time.monotonic()
         fresh = not self.has_stage(stage)

@@ -103,15 +103,21 @@ def extract(documents: DataFrame,
     return df.select(*cols)
 
 
+def scored_blocks(documents: DataFrame,
+                  cfg: ExtractionConfig = DEFAULT_CONFIG) -> DataFrame:
+    """documents -> (url, scored): stages 1+2 as extract() runs them, one
+    row per url — the nested `blocks` checkpoint (FIXTURES.md §2). A url
+    without blocks still has its row, with an empty array."""
+    df = with_blocks(documents.select("url", "html"), cfg)
+    return with_scored_blocks(df, cfg).select("url", "scored")
+
+
 def extract_blocks(documents: DataFrame,
                    cfg: ExtractionConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Exploded stage-1/2 checkpoint view: one row per candidate block
-    (the `blocks` table of FIXTURES.md §2) — used for checkpointing,
-    lineage and SQL-shaped inspection, not the hot path."""
-    df = with_blocks(documents.select("url", "html"), cfg)
-    df = with_scored_blocks(df, cfg)
-    b = F.explode_outer("scored").alias("b")
-    return df.select("url", b).select("url", "b.*")
+    """Exploded view of scored_blocks: one row per candidate block, for
+    SQL-shaped inspection, not the hot path."""
+    b = F.explode("scored").alias("b")
+    return scored_blocks(documents, cfg).select("url", b).select("url", "b.*")
 
 
 def extract_python(url: str, html: bytes | None,
@@ -119,9 +125,10 @@ def extract_python(url: str, html: bytes | None,
                    task: dict | None = None) -> dict:
     """Pure-Python reference implementation of the full per-row
     pipeline, used by unit tests to hand-compute expectations. Mirrors
-    extract() semantics 1:1 (score/filter formulas kept in sync by the
-    tests/test_parity.py cross-check). task mirrors the per-row
-    task_cfg struct: non-None keys override cfg thresholds."""
+    extract() semantics 1:1 (score/filter formulas kept in sync by
+    tests/test_pipeline_spark.py::TestParity::test_spark_matches_python_reference).
+    task mirrors the per-row task_cfg struct: non-None keys override cfg
+    thresholds."""
     from dxnn_ocr_cpp_spark.operators.segment import segment_one
 
     t = task or {}
@@ -158,65 +165,53 @@ def extract_checkpointed(spark, documents: DataFrame, root: str,
                          cfg: ExtractionConfig = DEFAULT_CONFIG,
                          run_id: str | None = None):
     """Stage-wise checkpointed extraction (north rule X15): stage 1+2
-    snapshot the exploded scored-blocks table, stage 3 rebuilds spans
-    from that checkpoint — a crash between stages resumes WITHOUT
-    re-parsing any html (the expensive stage). A resume parses only the
-    new docs and extends a valid `extracted` by their urls alone.
+    snapshot scored_blocks, one nested row per url, and stage 3 runs
+    extract()'s own emission over that checkpoint — a crash between
+    stages resumes WITHOUT re-parsing any html (the expensive stage). A
+    resume parses only the new docs and extends a valid `extracted` by
+    their urls alone.
+
+    A root whose `blocks` checkpoint is in the older exploded layout (a
+    top-level `block_id` column) is rebuilt once, with `extracted`, from
+    `documents`: urls found only in that old checkpoint are not kept.
 
     Returns (extracted DataFrame materialized from the final
     checkpoint, CheckpointedRun handle for lineage inspection).
     """
     from dxnn_ocr_cpp_spark.lineage import CheckpointedRun
-    from dxnn_ocr_cpp_spark.operators.emit import span_filter
 
     if TASK_CONFIG_COL in documents.columns:
-        # the blocks checkpoint schema does not carry per-row configs,
-        # so a resumed run could silently apply different thresholds
-        # than the original — refuse instead
+        # the checkpoint does not carry per-row configs: a resumed run
+        # could silently apply other thresholds than the original
         raise ValueError(
             "extract_checkpointed does not support per-row task_cfg; "
             "use extract() for mixed-policy batches or split the batch "
             "by policy")
 
     run = CheckpointedRun(spark, root, run_id=run_id)
+    if "block_id" in run.stage_columns("blocks"):
+        for stage in ("blocks", "extracted"):
+            run.invalidate_stage(stage)
     # read before the blocks stage invalidates it: a valid `extracted`
     # over blocks that are appended to, never rewritten, can be extended
     extendable = run.has_stage("blocks") and run.has_stage("extracted")
 
-    # stage 1+2: parse + score, exploded for a columnar checkpoint. Only
-    # docs absent from the checkpoint are parsed and their blocks appended
-    # (F8: extract_blocks emits a null-block row per block-less url, so
-    # resume sees it as done). An append first invalidates `extracted`,
-    # so a crash before stage 3 completes ends in a full rebuild.
+    # stage 1+2: only docs absent from the checkpoint are parsed; an append
+    # first invalidates `extracted`, so a crash before stage 3 rebuilds it
+    block_bytes = F.aggregate("scored", F.lit(0).cast("long"),
+                              lambda acc, b: acc + F.length(b["text"]))
     blocks, new_blocks = run.run_incremental_stage(
-        "blocks", documents, lambda todo: extract_blocks(todo, cfg),
-        key="url", bytes_out_col="text", invalidates=("extracted",))
+        "blocks", documents, lambda todo: scored_blocks(todo, cfg),
+        key="url", bytes_out_col=block_bytes, invalidates=("extracted",))
 
-    # stage 3: emission from the checkpoint — the blocks left their row
-    # at the checkpoint boundary, so this path pays ONE shuffle by design
-    # (the non-checkpointed extract() path pays zero). collect_list after
-    # the shuffle loses the array order, so the one sort here restores it
-    # by block_id, unique per url.
-    def build_extracted(b):
-        # the SAME keep predicate as the hot path (span_filter over a
-        # struct of the flat checkpoint columns) — a hand-copied filter
-        # here could drift and break hot-vs-checkpointed byte-identity
-        keep = F.col("block_id").isNotNull() & span_filter(
-            F.struct(F.col("score"), F.col("n_text_chars"),
-                     F.col("n_link_chars"), F.col("text")), cfg)
-        spans = b.withColumn("_k", F.when(keep, F.struct(
-            F.col("block_id"), F.col("text"))))
-        agg = (spans.groupBy("url")
-               .agg(F.array_sort(F.collect_list("_k")).alias("ks")))
-        txt = F.array_join(F.transform(F.col("ks"), lambda s: s["text"]),
-                           cfg.span_separator)
-        return agg.select("url", txt.alias("text"),
-                          F.size("ks").cast("int").alias("n_spans"))
-
-    # stage 3 is per url and appended blocks are new urls: extend by the
-    # new blocks alone; else run_stage rebuilds it if marked stale
+    # stage 3 is extract()'s emission over the stored arrays: no shuffle,
+    # no sort. It is per url and appended blocks are new urls: extend by
+    # the new blocks alone; else run_stage rebuilds it if marked stale
     extend = extendable and new_blocks is not None
-    extracted = run.run_stage(
-        "extracted", lambda: build_extracted(new_blocks if extend else blocks),
-        bytes_out_col="text", append=extend)
+
+    def emit():
+        df = with_final_text(with_spans(new_blocks if extend else blocks, cfg), cfg)
+        return df.select("url", "text", F.size("spans").cast("int").alias("n_spans"))
+
+    extracted = run.run_stage("extracted", emit, bytes_out_col="text", append=extend)
     return extracted, run

@@ -8,7 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from dxnn_ocr_cpp_spark.corpus import generate_documents_df
-from dxnn_ocr_cpp_spark.pipeline import extract, extract_checkpointed
+from dxnn_ocr_cpp_spark.pipeline import (extract, extract_blocks,
+                                         extract_checkpointed, scored_blocks)
 
 
 @pytest.fixture()
@@ -26,11 +27,9 @@ def test_checkpointed_equals_hot_path(spark, docs, tmp_path):
 def test_crash_between_stages_resumes_without_reparse(spark, docs, tmp_path):
     root = str(tmp_path / "r2")
     # run stage 1+2 only, then "crash" (never build stage 3)
-    run1_ext, run1 = None, None
     from dxnn_ocr_cpp_spark.lineage import CheckpointedRun
-    from dxnn_ocr_cpp_spark.pipeline import extract_blocks
     pre = CheckpointedRun(spark, root, run_id="pre-crash")
-    pre.run_stage("blocks", lambda: extract_blocks(docs), bytes_out_col="text")
+    pre.run_stage("blocks", lambda: scored_blocks(docs))
 
     # resumed run: blocks stage must come from the checkpoint — assert
     # by making reparse impossible (feed an EMPTY documents df)
@@ -55,15 +54,11 @@ def test_partial_blocks_resume(spark, docs, tmp_path):
     and byte-equal a clean run — through the public API."""
     root = str(tmp_path / "r3")
     from dxnn_ocr_cpp_spark.lineage import CheckpointedRun
-    from dxnn_ocr_cpp_spark.pipeline import extract_blocks
 
     half = docs.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == 0)
     pre = CheckpointedRun(spark, root, run_id="half")
-    pre.run_incremental_stage("blocks", half,
-                              lambda todo: extract_blocks(todo),
-                              key="url", bytes_out_col="text")
-    assert pre.read_stage("blocks").select("url").distinct().count() \
-        == half.select("url").count()
+    pre.run_incremental_stage("blocks", half, scored_blocks, key="url")
+    assert pre.read_stage("blocks").count() == half.count()
 
     ext, run = extract_checkpointed(spark, docs, root, run_id="resumed")
     got = {r["url"]: r["text"] for r in ext.collect()}
@@ -73,11 +68,8 @@ def test_partial_blocks_resume(spark, docs, tmp_path):
     # the blocks checkpoint holds each url exactly once (no re-parse
     # of the pre-checkpointed half, no duplicates from the append)
     blocks = run.read_stage("blocks")
-    assert blocks.select("url").distinct().count() == docs.count()
-    n_urls_with_dupes = (blocks.select("url", "block_id").distinct()
-                         .groupBy("url", "block_id").count()
-                         .filter(F.col("count") > 1).count())
-    assert n_urls_with_dupes == 0
+    assert blocks.count() == blocks.select("url").distinct().count() \
+        == docs.count()
     # both runs appear in blocks lineage (pre wrote half, resume extended)
     stages = {(r["run_id"], r["stage"])
               for r in run.lineage().select("run_id", "stage").distinct().collect()}
@@ -210,38 +202,79 @@ def test_rewritten_blocks_rebuild_extracted(spark, docs, tmp_path):
     assert _extracted_rows_by_run(run)["second"] == docs.count()
 
 
-def test_root_with_older_blocks_schema_resumes(spark, docs, tmp_path):
-    """A root whose `blocks` checkpoint still carries the older `depth`
-    and `pos` columns resumes over more urls, by extending `extracted`
-    and by rebuilding it, and each time reads as extract()."""
+def _rows_by_stage_and_run(run):
+    return {(r["stage"], r["run_id"]): r["rows"] for r in
+            run.lineage().groupBy("stage", "run_id")
+            .agg(F.sum("row_count").alias("rows")).collect()}
+
+
+@pytest.mark.parametrize("depth_pos", [True, False],
+                         ids=["with-depth-pos", "without-depth-pos"])
+def test_root_in_old_exploded_layout_is_rebuilt_once(spark, docs, tmp_path,
+                                                     depth_pos):
+    """A root whose `blocks` checkpoint is exploded (one row per block, a
+    top-level `block_id`) is rebuilt once, `blocks` and `extracted`
+    alike, into the nested layout; a later resume extends that root."""
     from dxnn_ocr_cpp_spark.lineage import CheckpointedRun
-    from dxnn_ocr_cpp_spark.pipeline import extract_blocks
 
     root = str(tmp_path / "r9")
     part = docs.filter(F.pmod(F.xxhash64("url"), F.lit(10)) != 0)
     n, n_part = docs.count(), part.count()
 
-    def older_blocks(todo):
-        # the older column order; `pos` runs against block_id, so a
-        # stage 3 that still sorted by it would reverse every page
+    def exploded(todo):
+        if not depth_pos:
+            return extract_blocks(todo)
+        # the oldest column order; `pos` runs against block_id
         return extract_blocks(todo).select(
             "url", "block_id", "tag", "boiler", F.lit(0).alias("depth"),
             (-F.col("block_id")).alias("pos"), "text", "n_text_chars",
             "n_link_chars", "score")
 
     old = CheckpointedRun(spark, root, run_id="old")
-    old.run_incremental_stage("blocks", part, older_blocks,
-                              bytes_out_col="text")
+    old.run_incremental_stage("blocks", part, exploded, bytes_out_col="text")
     old.run_stage("extracted",
                   lambda: extract(part).select("url", "text", "n_spans"),
                   bytes_out_col="text")
-    assert {"depth", "pos"} <= set(old.read_stage("blocks").columns)
+    assert "block_id" in old.stage_columns("blocks")
+
+    ext, run = extract_checkpointed(spark, part, root, run_id="rebuild")
+    assert _texts(ext) == _texts(extract(part))
+    assert run.stage_columns("blocks") == ["url", "scored"]
+    assert _rows_by_stage_and_run(run) == {("blocks", "rebuild"): n_part,
+                                           ("extracted", "rebuild"): n_part}
 
     ext, run = extract_checkpointed(spark, docs, root, run_id="extend")
     assert _texts(ext) == _texts(extract(docs))
-    assert _extracted_rows_by_run(run) == {"old": n_part, "extend": n - n_part}
+    assert _rows_by_stage_and_run(run) == {
+        ("blocks", "rebuild"): n_part, ("blocks", "extend"): n - n_part,
+        ("extracted", "rebuild"): n_part, ("extracted", "extend"): n - n_part}
 
-    run.invalidate_stage("extracted")
-    ext, run = extract_checkpointed(spark, docs, root, run_id="rebuild")
-    assert _texts(ext) == _texts(extract(docs))
-    assert _extracted_rows_by_run(run) == {"rebuild": n}
+
+def test_blocks_lineage_counts_urls_and_block_text(spark, docs, tmp_path):
+    """`blocks` holds one row per url: its lineage counts urls, and its
+    bytes_out is the total block-text length of the exploded view."""
+    ext, run = extract_checkpointed(spark, docs, str(tmp_path / "r10"))
+    rows, out = run.lineage().filter(F.col("stage") == "blocks") \
+        .agg(F.sum("row_count"), F.sum("bytes_out")).collect()[0]
+    assert rows == docs.count()
+    assert out == extract_blocks(docs).agg(F.sum(F.length("text"))) \
+        .collect()[0][0] > 0
+
+
+def test_blockless_urls_are_not_parsed_again(spark, tmp_path):
+    """A url without blocks (empty body, null html) still has its one
+    `blocks` row, an empty array, so a resume parses it no more."""
+    from dxnn_ocr_cpp_spark.schemas import DOCUMENTS
+
+    blank = spark.createDataFrame([("u-empty", None, b"", None, None),
+                                   ("u-null", None, None, None, None)],
+                                  DOCUMENTS)
+    root = str(tmp_path / "r11")
+    ext, run = extract_checkpointed(spark, blank, root, run_id="first")
+    assert _texts(ext) == {"u-empty": ("", 0), "u-null": ("", 0)}
+    assert [r[0] for r in run.read_stage("blocks")
+            .select(F.size("scored")).collect()] == [0, 0]
+
+    ext, run = extract_checkpointed(spark, blank, root, run_id="second")
+    assert _texts(ext) == {"u-empty": ("", 0), "u-null": ("", 0)}
+    assert ("blocks", "second") not in _rows_by_stage_and_run(run)

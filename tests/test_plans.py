@@ -41,6 +41,30 @@ class TestExtractionPlan:
         df = extract(generate_documents_df(spark, 20), markdown=True)
         assert "array_sort" not in optimized_of(df)
 
+    def test_checkpointed_stage3_no_shuffle_no_sort(self, spark, tmp_path,
+                                                   monkeypatch):
+        """Checkpointed stage 3 over a written `blocks` checkpoint is
+        extract()'s emission over the stored arrays: nothing regroups
+        or re-sorts the blocks."""
+        from dxnn_ocr_cpp_spark.lineage import CheckpointedRun
+        from dxnn_ocr_cpp_spark.pipeline import extract_checkpointed
+
+        stage3, run_stage = [], CheckpointedRun.run_stage
+
+        def spy(self, stage, df_fn, *a, **kw):
+            if stage == "extracted":
+                stage3.append(df_fn())
+            return run_stage(self, stage, df_fn, *a, **kw)
+
+        monkeypatch.setattr(CheckpointedRun, "run_stage", spy)
+        extract_checkpointed(spark, generate_documents_df(spark, 20),
+                             str(tmp_path / "ck"))
+        (df,) = stage3
+        plan, optimized = plan_of(df), optimized_of(df)
+        assert "Exchange" not in plan, plan
+        assert "Sort" not in plan and "Sort" not in optimized, optimized
+        assert "array_sort" not in optimized, optimized
+
     def test_scan_pruned_to_url_html(self, spark):
         path = "/tmp/_plan_prune_docs"
         generate_documents_df(spark, 5).write.mode("overwrite").parquet(path)

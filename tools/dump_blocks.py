@@ -44,8 +44,6 @@ def render_doc(url: str, blocks: list, cfg) -> str:
              f"max_link_density={cfg.max_link_density}</h2>"]
     n_kept = 0
     for b in blocks:
-        if b["block_id"] is None:
-            continue
         # mirrors emit.span_filter exactly (change that, change this —
         # the debug tool must explain the engine's actual predicate)
         ld = b["n_link_chars"] / max(b["n_text_chars"], 1)
@@ -99,7 +97,7 @@ def main() -> None:
     outdir = pathlib.Path(args.out)
     outdir.mkdir(parents=True, exist_ok=True)
     for i, (url, blocks) in enumerate(sorted(by_url.items())):
-        blocks.sort(key=lambda b: b["block_id"] or 0)
+        blocks.sort(key=lambda b: b["block_id"])
         p = outdir / f"doc_{i:03d}.html"
         p.write_text(render_doc(url, blocks, DEFAULT_CONFIG),
                      encoding="utf-8")

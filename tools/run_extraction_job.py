@@ -49,9 +49,9 @@ def main(argv):
             extracted.writeTo(out[len(_TABLE_PREFIX):]).createOrReplace()
         else:
             extracted.write.mode("overwrite").parquet(out)
-    # each write's lineage covers only the rows it added, so on a root
-    # that was only ever extended this is the stage's true row total
-    # (a full rebuild after a crash counts the rows it rewrote again)
+    # each write's lineage covers only the rows it added, and a full
+    # rewrite of a stage replaces its earlier lineage, so this is each
+    # stage's url count (`blocks` holds one row per url, like `extracted`)
     stats = run.lineage().groupBy("stage").sum("row_count").collect()
     print({r[0]: r[1] for r in stats})
     spark.stop()
