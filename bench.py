@@ -1,8 +1,9 @@
 """Benchmark harness (driver contract + north-rule scaling evidence).
 
 Phase 1  headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-         local[$SPARK_GRAFT_CPUS]: per-query wall seconds, fully
-         materialized via the noop sink (no driver collect cost).
+         local[$SPARK_GRAFT_CPUS] (default: this host's cores):
+         per-query wall seconds, fully materialized via the noop sink
+         (no driver collect cost).
 Phase 2  extraction scaling: the SAME seeded corpus parquet is
          extracted at local[N] and local[4N] in separate JVMs
          (subprocess) — docs/sec at both + scaling efficiency
@@ -10,11 +11,13 @@ Phase 2  extraction scaling: the SAME seeded corpus parquet is
          pure-python CPU scaling ceiling for context. Two windows:
          narrow 2->8 (host scales ~0.95, so the number is the
          engine's) and wide 8->32 (SURVEY §0's named pair, read
-         against its lower host ceiling). A window is measured only
-         when the host has the hi leg's cores and the run's budget
-         fits it; otherwise its committed stable record is reused,
-         labeled. The isolated-executor 8->32 window is the frozen
-         record BENCH/stable_scaling_iso_8_32.json, published as is.
+         against its lower host ceiling). Each window is in one of
+         two states: measured this run (only under `--full`, on a
+         host with the hi leg's cores; a stable window rewrites its
+         record, an unstable one is published flagged), or its
+         committed record BENCH/stable_scaling_*.json printed
+         verbatim with its `measured_at`. The isolated-executor 8->32
+         window is always the record BENCH/stable_scaling_iso_8_32.json.
 
 Prints ONE compact JSON line (fits the driver's 2000-char tail
 capture):
@@ -23,14 +26,6 @@ capture):
    "extraction_iso": {summary}, "detail": "BENCH/bench_detail.json"}
 and rewrites BENCH/BASELINE.md + BENCH/bench_detail.json (the full
 per-query map and full window records).
-
-Scenario modes (`python bench.py --mode latency|stress|stability|
-capacity`) self-measure the ENGINE — per-job latency percentiles,
-concurrent-job degradation, run-to-run drift, batch-size capacity
-sweep — the analog of the reference's 5-mode scenario framework
-(its server/benchmark/benchmark_config.yaml:29-35,
-core/metrics.py:63-205). They write BENCH/MODES.md and print one
-JSON line each; the default invocation is unchanged.
 """
 
 from __future__ import annotations
@@ -55,10 +50,11 @@ REPO = pathlib.Path(__file__).resolve().parent
 # same confinement a cluster would; the busy-CPU accounting (still
 # published) then VERIFIES the pin instead of correcting for its
 # absence. Legs at the full machine width are left unpinned (no-op).
-PIN_CPUS = shutil.which("taskset") is not None and \
-    os.environ.get("SPARK_GRAFT_PIN", "1") != "0"
+PIN_CPUS = shutil.which("taskset") is not None
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# task slots for the query table and corpus generation: more slots
+# than the host has cores would only time-slice Python workers
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 SEED = 42
 
 # N -> 4N pair for the scaling criterion. 2->8: the host VM's OWN
@@ -74,16 +70,6 @@ SCALING_LEVELS = (2, 8)
 # denominator shopping. Its host ceiling is much lower (~0.71-0.85
 # measured), so its engine number is read against that ceiling.
 WIDE_LEVELS = (8, 32)
-
-# wall-clock budget for the DEFAULT `python bench.py` run (queries +
-# any scaling-window re-measures). The driver's capture killed the
-# r4 run at timeout because the default re-measured every window
-# unconditionally (~40-70 min); under budget the query table always
-# runs and each window re-measures only if its estimate fits —
-# otherwise the committed stable window is reused, labeled. `--full`
-# disables the budget (never the host-cores check).
-BENCH_BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "480"))
-
 
 def docs_for(levels: tuple) -> int:
     """Corpus size for a scaling window. Scaling measurement needs
@@ -106,11 +92,10 @@ def _corpus_version() -> int:
 
 
 # the import closure of the measured job (session build -> corpus read
-# -> pipeline.extract): the scaling windows and the cached
-# total-chars count depend on exactly these files. Keying caches on
-# this closure instead of the whole package means adding a curation
-# operator (dedup.py, linkgraph.py, ...) doesn't throw away a
-# measured-stable scaling window that never executed that code.
+# -> pipeline.extract): the cached total-chars count depends on
+# exactly these files. Keying on this closure instead of the whole
+# package means adding a curation operator (dedup.py, linkgraph.py,
+# ...) doesn't throw away a count that never executed that code.
 _EXTRACTION_CLOSURE = [
     "pipeline.py", "config.py", "htmlseg.py", "schemas.py",
     "partitioning.py", "session.py", "corpus.py",
@@ -120,8 +105,9 @@ _EXTRACTION_CLOSURE = [
 
 def _package_code_digest() -> str:
     """Digest of the extraction hot path's import closure — cache key
-    for anything derived from extraction OUTPUT (total chars, scaling
-    windows), which depends on this code as much as on the corpus."""
+    for the total-chars count (derived from extraction OUTPUT, so it
+    depends on this code as much as on the corpus), and the code
+    provenance a window record carries."""
     import hashlib
     h = hashlib.blake2b(digest_size=8)
     pkg = REPO / "dxnn_ocr_cpp_spark"
@@ -531,31 +517,15 @@ def _run_worker(cores: int, corpus: str, timeout: float) -> dict:
 
 
 def run_scaling(corpus: str, levels: tuple = SCALING_LEVELS,
-                min_rounds: int = 3, max_rounds: int = 5,
-                deadline: float | None = None) -> dict:
+                min_rounds: int = 3, max_rounds: int = 5) -> dict:
     """Alternate the two levels as lo hi lo hi lo ... so every hi run
     is bracketed by two lo runs: efficiency ratios use the bracketing
     mean (first-order drift cancellation), throughput uses
     best-per-level. The sandbox VM's available CPU drifts by ~10% over
     minutes; interleaving prevents a noise dip from landing entirely
-    on one level.
-
-    deadline: optional wall-clock cap (time.monotonic() value). The
-    min_rounds bracket always runs — the caller budgeted for it
-    before starting the window — but every OPTIONAL phase checks the
-    deadline first: the health-gate's 90 s waits, the noise-triggered
-    extension rounds, and the healthy-recovery rounds. This caps the
-    retry policy by budget, not only by count (the r4 failure: window
-    extensions compounded into a 40-70 min default run the driver
-    killed at timeout)."""
-    def room_for(cost: float) -> bool:
-        return deadline is None or time.monotonic() + cost <= deadline
-
-    def round_cost() -> float:
-        # one more round = one hi leg + one lo leg, from the walls
-        # this window actually measured (plus scheduling slack)
-        return 1.2 * (hi_seq[-1]["wall_sec"] + lo_seq[-1]["wall_sec"])
-
+    on one level. Every optional phase is capped by count: the
+    health-gate waits at 5 probes, the noise-triggered extension and
+    healthy-recovery rounds at max_rounds."""
     lo, hi = levels
     lo_seq, hi_seq = [], []
     leg_timeout = _window_cost_estimate(levels, min_rounds)
@@ -632,7 +602,7 @@ def run_scaling(corpus: str, levels: tuple = SCALING_LEVELS,
     p, st = probe()
     probes.append(p); gate_steals.append(st)
     while (not healthy(probes[-1]) or gate_steals[-1] > 0.05) \
-            and len(probes) < 5 and room_for(90 + 45):
+            and len(probes) < 5:
         time.sleep(90)
         p, st = probe()
         probes.append(p); gate_steals.append(st)
@@ -645,8 +615,7 @@ def run_scaling(corpus: str, levels: tuple = SCALING_LEVELS,
     # mid-measurement, so collect up to two more rounds — more data
     # under noise, the same median estimator either way
     while n_rounds() < max_rounds \
-            and max(ratios()) - min(ratios()) > 0.1 \
-            and room_for(round_cost()):
+            and max(ratios()) - min(ratios()) > 0.1:
         one_round()
     # recovery rounds: if the host was degraded for every pre-run probe
     # but measures healthy now, the measurement window was bad — sample
@@ -655,7 +624,7 @@ def run_scaling(corpus: str, levels: tuple = SCALING_LEVELS,
     post = cpu_ceiling(lo, hi)
     probes.append(post)
     if healthy(post) and not any(healthy(p) for p in probes[:-1]):
-        while n_rounds() < max_rounds and room_for(round_cost()):
+        while n_rounds() < max_rounds:
             one_round()
     # best observed throughput per level, across all runs (the VM's
     # available CPU drifts ~10% over minutes, so best-per-level is the
@@ -741,67 +710,37 @@ def stable_cache_path(levels: tuple, tag: str = "") -> pathlib.Path:
 
 
 def stable_window_policy(ext: dict, levels: tuple, corpus: str) -> dict:
-    """Last-known-good policy for the scaling headline, bounded so it
-    can never cherry-pick: a STABLE window (validity checks in
-    run_scaling) always replaces the cache and is always reported; an
-    UNSTABLE window is reported verbatim UNLESS a cached stable window
-    exists, in which case the stable one becomes the headline and the
-    unstable measurement is published alongside under
-    `unstable_current_window`. Stability is a property of the HOST
-    during the window (ceiling-probe drift, ratio spread), decided
-    before any comparison of efficiency values — a stable 0.85 will
-    replace a stable 0.99, so the policy prefers by VALIDITY, never by
-    magnitude."""
+    """A window measured this run is published verbatim; only a STABLE
+    one (validity checks in run_scaling) rewrites its committed record.
+    Stability is a property of the HOST during the window (ceiling-probe
+    drift, ratio spread, steal), decided before any comparison of
+    efficiency values — a stable 0.85 replaces a stable 0.99, so the
+    record follows VALIDITY, never magnitude. An unstable window leaves
+    the record as it was and is flagged in the report."""
     import datetime
     import platform
-    cache = stable_cache_path(levels)
-    # keyed by engine-code digest + host so a cached window can never be
-    # republished for code it didn't measure or a machine it didn't run on
-    key = {"corpus": corpus, "levels": list(levels),
-           "code": _package_code_digest(), "host": platform.node(),
-           # methodology marker: a window measured without cpuset
-           # pinning must never be republished as if it were pinned
-           # (and vice versa) — the lo-leg core borrowing changes the
-           # denominator of every ratio
-           "pinned": PIN_CPUS}
     if not ext.get("host_window_unstable"):
+        cache = stable_cache_path(levels)
         cache.parent.mkdir(parents=True, exist_ok=True)
+        # window_key is provenance: which corpus, code, host and pinning
+        # the record measured
+        key = {"corpus": corpus, "levels": list(levels),
+               "code": _package_code_digest(), "host": platform.node(),
+               "pinned": PIN_CPUS}
         cache.write_text(json.dumps(
             {"measured_at": datetime.datetime.now(
                 datetime.timezone.utc).isoformat(timespec="seconds"),
              "window_key": key, **ext}, indent=1))
-        return ext
-    if cache.exists():
-        stable = json.loads(cache.read_text())
-        # only substitute a window measured on the SAME corpus at the
-        # SAME parallelism pair — never borrow across configurations —
-        # and re-check the cached window against the CURRENT validity
-        # predicate, so a window cached before a gate was tightened
-        # (the r2 1.0508 headline; the r3 throttled-cgroup window
-        # where hi-level throughput fell below lo-level) can never be
-        # republished
-        eff = stable.get("scaling_efficiency", 99)
-        ceil = stable.get("host_cpu_ceiling", 1e-9)
-        lo_dps = stable.get(f"local[{levels[0]}]", {}) \
-            .get("docs_per_sec", 0.0)
-        hi_dps = stable.get(f"local[{levels[1]}]", {}) \
-            .get("docs_per_sec", 1.0)
-        if (stable.get("window_key") == key and eff <= 1.02
-                and eff / ceil <= 1.05 and hi_dps > lo_dps):
-            stable["unstable_current_window"] = ext
-            return stable
     return ext
 
 
 def _window_cost_estimate(levels: tuple, min_rounds: int = 3) -> float:
-    """Conservative wall-clock estimate for re-measuring a scaling
-    window, from the cached stable window's own measured leg walls
+    """Per-leg subprocess timeout for a scaling window: a conservative
+    estimate of the whole min_rounds bracket — the two ceiling probes
+    plus the lo-hi-lo legs — from the committed record's own leg walls
     when available (magnitude constants from BENCH/BASELINE.md
-    otherwise). Counts the two ceiling probes, the min_rounds
-    lo-hi-lo bracket, and — when the corpus cache is absent — corpus
-    generation, then adds 25% headroom. Deliberately ignores the
-    noise-triggered extension rounds: those are separately capped by
-    the same deadline inside run_scaling."""
+    otherwise), with 25% headroom. No single leg of the window can
+    honestly take longer."""
     lo, hi = levels
     cache = stable_cache_path(levels)
     lo_w, hi_w = (170.0, 50.0)  # measured magnitudes on this VM
@@ -814,72 +753,54 @@ def _window_cost_estimate(levels: tuple, min_rounds: int = 3) -> float:
             pass
     probe_cost = 40.0  # cpu_ceiling: warm + 3x burn at both widths
     est = 2 * probe_cost + (min_rounds + 1) * lo_w + min_rounds * hi_w
-    corpus = corpus_cache(docs_for(levels))
-    if not os.path.exists(corpus):
-        est += docs_for(levels) * 0.002  # corpus generation
     return est * 1.25
 
 
 def reuse_window(levels: tuple, reason: str,
                  tag: str = "") -> dict | None:
-    """The committed stable window, verbatim, labeled with why it was
-    not re-measured (`remeasure_skipped`: "budget" or
-    "not_measurable_here") — plus `cache_key_stale` when the engine
-    hot path, host or pinning changed since it was measured, so a
-    reused number can never silently pose as a fresh one. None when
-    no record is committed."""
-    import platform
+    """The committed record, verbatim, labeled with why it was not
+    measured this run (`remeasure_skipped`: "not_requested" without
+    `--full`, "not_measurable_here" on a host narrower than its hi
+    leg); its own `measured_at` says when it was. None when no record
+    is committed."""
     cache = stable_cache_path(levels, tag)
     if not cache.exists():
         return None
     w = json.loads(cache.read_text())
     w["remeasure_skipped"] = reason
-    key = w.get("window_key", {})
-    if key.get("code") != _package_code_digest() \
-            or key.get("host") != platform.node() \
-            or key.get("pinned") != PIN_CPUS:
-        w["cache_key_stale"] = True
     return w
 
 
-def measure_or_reuse_window(levels: tuple,
-                            deadline: float | None = None,
-                            min_rounds: int = 3, max_rounds: int = 5,
-                            required: bool = False) -> dict | None:
-    """One scaling window. A window whose hi leg needs more cores than
-    this host has is never measured, not even under `--full`: its legs
-    would run oversubscribed and measure the host's time-slicing, so
-    the committed record is reused, labeled "not_measurable_here".
-    Otherwise it is re-measured when the estimated cost fits before
-    `deadline`, else the committed record is reused, labeled "budget".
-    A `required` window (the headline) is measured even over budget
-    when NO record exists — the report needs some window — while an
-    optional one is omitted (None)."""
+def measure_or_reuse_window(levels: tuple, full: bool = False,
+                            min_rounds: int = 3,
+                            max_rounds: int = 5) -> dict | None:
+    """One scaling window, in one of two states: measured this run
+    (only when `full`), or the committed record (None when there is
+    none). A window whose hi leg needs more cores than this host has is
+    never measured, not even under `full`: its legs would run
+    oversubscribed and measure the host's time-slicing."""
     if levels[1] > (os.cpu_count() or 1):
         return reuse_window(levels, "not_measurable_here")
-    est = _window_cost_estimate(levels, min_rounds)
-    if deadline is not None and time.monotonic() + est > deadline:
-        w = reuse_window(levels, "budget")
-        if w is not None or not required:
-            return w
+    if not full:
+        return reuse_window(levels, "not_requested")
     corpus = corpus_cache(docs_for(levels))
     ensure_corpus(corpus, docs_for(levels))
     w = run_scaling(corpus, levels, min_rounds=min_rounds,
-                    max_rounds=max_rounds, deadline=deadline)
+                    max_rounds=max_rounds)
     return stable_window_policy(w, levels, corpus)
 
 
 def _status_line(ext: dict, hi: int) -> str:
-    """One line per window: measured this run, reused under the
-    budget, or not measurable on this host."""
+    """One line per window: measured this run, or the committed record
+    and why this run did not measure it."""
     at = ext.get("measured_at", "?")
     why = ext.get("remeasure_skipped")
     if not why:
         s = "measured this run"
-    elif why == "budget":
-        s = (f"reused under the budget — the stable window measured {at} "
-             f"is shown, since re-measuring did not fit "
-             f"SPARK_GRAFT_BENCH_BUDGET (`--full` lifts the budget)")
+    elif why == "not_requested":
+        s = (f"committed record — the window measured {at} is shown; "
+             f"`python bench.py --full` re-measures it on a host with "
+             f"{hi} cores")
     elif ext.get("mode") == "isolated-executors":
         s = (f"not measurable here — this bench runs no multi-JVM hi "
              f"leg; the frozen record measured {at} is shown")
@@ -887,9 +808,6 @@ def _status_line(ext: dict, hi: int) -> str:
         s = (f"not measurable here — the hi leg needs {hi} cores and "
              f"this host has {os.cpu_count()}; the record measured "
              f"{at} is shown")
-    if ext.get("cache_key_stale"):
-        s += (" (cache_key_stale: the extraction hot path, host or "
-              "pinning changed since)")
     return f"**Status: {s}.** See docs/SCALE.md §2."
 
 
@@ -1000,22 +918,7 @@ def _window_section(ext: dict, levels: tuple, headline: bool) -> list:
                 f"{ext['per_core_efficiency_rounds']}.",
                 "",
             ]
-    if "unstable_current_window" in ext:
-        cur = ext["unstable_current_window"]
-        lines += [
-            f"Scaling numbers above are the most recent STABLE window "
-            f"(measured {ext.get('measured_at', 'earlier')}, same code, "
-            f"same corpus): THIS run's scaling window was flagged "
-            f"unstable (host ceiling probes "
-            f"{cur['host_ceiling_probes']}, per-round "
-            f"{cur['efficiency_per_round']}, median "
-            f"{cur['scaling_efficiency']}) and is published here "
-            f"verbatim rather than as the headline. The policy prefers "
-            f"windows by VALIDITY only, never by efficiency magnitude "
-            f"(see bench.py stable_window_policy).",
-            "",
-        ]
-    elif ext.get("host_window_unstable"):
+    if ext.get("host_window_unstable"):
         lines += [
             "**Window flagged UNSTABLE during this run** (a ceiling "
             "probe > 1.05, matched-round ratio spread > 0.2, or an "
@@ -1084,205 +987,6 @@ def write_report(payload: dict) -> None:
     out.write_text("\n".join(lines))
 
 
-# ---------------- scenario modes (reference 5-mode analog) ----------
-
-def _pctl(xs: list, q: float) -> float:
-    """Linear-interpolated percentile (the reference's numpy
-    percentile semantics, core/metrics.py:63-91)."""
-    s = sorted(xs)
-    if len(s) == 1:
-        return s[0]
-    pos = q * (len(s) - 1)
-    lo = int(pos)
-    frac = pos - lo
-    hi = min(lo + 1, len(s) - 1)
-    return s[lo] * (1 - frac) + s[hi] * frac
-
-
-def _mode_session(mode: str):
-    sys.path.insert(0, str(REPO))
-    from dxnn_ocr_cpp_spark.session import build_session
-    return build_session(app=f"bench-{mode}", master=f"local[{CPUS}]",
-                        shuffle_partitions=CPUS)
-
-
-def mode_latency(n_docs: int = 2000, jobs: int = 20) -> dict:
-    """Per-job latency percentiles: `jobs` identical small extraction
-    jobs through one session — what a caller submitting batch requests
-    experiences (reference latency mode: single-request round-trip
-    P50/P90/P99)."""
-    from dxnn_ocr_cpp_spark.corpus import generate_documents_df
-    from dxnn_ocr_cpp_spark.pipeline import extract
-    spark = _mode_session("latency")
-    try:
-        docs = generate_documents_df(spark, n_docs, seed=SEED).cache()
-        docs.count()  # materialize input so jobs measure extraction only
-        walls = []
-        _materialize(extract(docs))  # warm (JIT + Python workers)
-        for _ in range(jobs):
-            t0 = time.monotonic()
-            _materialize(extract(docs))
-            walls.append(time.monotonic() - t0)
-        return {"mode": "latency", "docs_per_job": n_docs, "jobs": jobs,
-                "p50_s": round(_pctl(walls, 0.5), 3),
-                "p90_s": round(_pctl(walls, 0.9), 3),
-                "p99_s": round(_pctl(walls, 0.99), 3),
-                "mean_s": round(sum(walls) / len(walls), 3),
-                "per_doc_ms_p50": round(_pctl(walls, 0.5) / n_docs * 1e3, 3)}
-    finally:
-        spark.stop()
-
-
-def mode_stress(n_docs: int = 2000, concurrency: int = 4,
-                jobs_per_thread: int = 3) -> dict:
-    """Concurrent-submission degradation: `concurrency` driver threads
-    each run extraction jobs against the same session (Spark schedules
-    them over the shared executor pool). Reports solo vs contended
-    per-job latency and aggregate throughput — the reference's stress
-    mode (concurrency 10 against one pipeline)."""
-    import threading
-    from dxnn_ocr_cpp_spark.corpus import generate_documents_df
-    from dxnn_ocr_cpp_spark.pipeline import extract
-    spark = _mode_session("stress")
-    try:
-        docs = generate_documents_df(spark, n_docs, seed=SEED).cache()
-        docs.count()
-        _materialize(extract(docs))  # warm
-        t0 = time.monotonic()
-        _materialize(extract(docs))
-        solo = time.monotonic() - t0
-
-        walls, lock = [], threading.Lock()
-
-        def worker():
-            for _ in range(jobs_per_thread):
-                t = time.monotonic()
-                _materialize(extract(docs))
-                with lock:
-                    walls.append(time.monotonic() - t)
-
-        threads = [threading.Thread(target=worker)
-                   for _ in range(concurrency)]
-        t0 = time.monotonic()
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        total = time.monotonic() - t0
-        n_jobs = concurrency * jobs_per_thread
-        return {"mode": "stress", "docs_per_job": n_docs,
-                "concurrency": concurrency, "jobs": n_jobs,
-                "solo_job_s": round(solo, 3),
-                "contended_p50_s": round(_pctl(walls, 0.5), 3),
-                "contended_p99_s": round(_pctl(walls, 0.99), 3),
-                # <1.0 would mean concurrency HURTS aggregate throughput
-                "aggregate_speedup": round(n_jobs * solo / total, 3),
-                "agg_docs_per_sec": round(n_jobs * n_docs / total, 1)}
-    finally:
-        spark.stop()
-
-
-def mode_stability(n_docs: int = 5000, repeats: int = 8) -> dict:
-    """Run-to-run drift: identical job `repeats` times; coefficient of
-    variation of throughput (reference stability mode: sustained load,
-    variance watched)."""
-    from dxnn_ocr_cpp_spark.corpus import generate_documents_df
-    from dxnn_ocr_cpp_spark.pipeline import extract
-    import statistics
-    spark = _mode_session("stability")
-    try:
-        docs = generate_documents_df(spark, n_docs, seed=SEED).cache()
-        docs.count()
-        _materialize(extract(docs))  # warm
-        tps = []
-        for _ in range(repeats):
-            t0 = time.monotonic()
-            _materialize(extract(docs))
-            tps.append(n_docs / (time.monotonic() - t0))
-        mean = statistics.mean(tps)
-        stdev = statistics.stdev(tps) if len(tps) > 1 else 0.0
-        return {"mode": "stability", "docs_per_job": n_docs,
-                "repeats": repeats,
-                "docs_per_sec_mean": round(mean, 1),
-                "docs_per_sec_min": round(min(tps), 1),
-                "docs_per_sec_max": round(max(tps), 1),
-                "cv": round(stdev / mean, 4)}
-    finally:
-        spark.stop()
-
-
-def mode_capacity(sizes: tuple = (2000, 8000, 32000)) -> dict:
-    """Throughput vs batch size: does docs/sec hold as the batch
-    grows? A flat curve = fixed per-job overhead amortized, no
-    superlinear term — the per-run capacity probe (reference capacity
-    mode: load until saturation)."""
-    from dxnn_ocr_cpp_spark.corpus import generate_documents_df
-    from dxnn_ocr_cpp_spark.pipeline import extract
-    spark = _mode_session("capacity")
-    try:
-        points = []
-        for n in sizes:
-            docs = generate_documents_df(spark, n, seed=SEED,
-                                         partitions=max(8, CPUS)).cache()
-            docs.count()
-            _materialize(extract(docs))  # warm
-            t0 = time.monotonic()
-            _materialize(extract(docs))
-            wall = time.monotonic() - t0
-            docs.unpersist()
-            points.append({"n_docs": n, "wall_s": round(wall, 3),
-                           "docs_per_sec": round(n / wall, 1)})
-        base = points[0]["docs_per_sec"]
-        return {"mode": "capacity", "points": points,
-                # >1: throughput still rising with batch size (overhead
-                # amortizing); ~1: flat; <<1: something superlinear
-                "largest_vs_smallest": round(
-                    points[-1]["docs_per_sec"] / base, 3)}
-    finally:
-        spark.stop()
-
-
-MODES = {"latency": mode_latency, "stress": mode_stress,
-         "stability": mode_stability, "capacity": mode_capacity}
-
-
-def write_modes_report(results: dict) -> None:
-    lines = ["# BENCH scenario modes",
-             "",
-             "Engine self-measurement (analog of the reference's "
-             "latency/stress/stability/capacity scenario framework, "
-             "/root/reference/server/benchmark/benchmark_config.yaml:29-35). "
-             f"local[{CPUS}], seeded corpus.",
-             ""]
-    for mode, r in results.items():
-        lines.append(f"## {mode}")
-        lines.append("")
-        for k, v in r.items():
-            if k != "mode":
-                lines.append(f"- {k}: `{v}`")
-        lines.append("")
-    out = REPO / "BENCH" / "MODES.md"
-    out.parent.mkdir(exist_ok=True)
-    out.write_text("\n".join(lines))
-
-
-def run_modes(names: list) -> None:
-    results = {}
-    for name in names:
-        if name not in MODES:
-            raise SystemExit(f"unknown mode {name}; pick from {list(MODES)}")
-        results[name] = MODES[name]()
-    # merge with previously recorded modes so single-mode runs don't
-    # wipe the report
-    prior_path = REPO / "BENCH" / "modes.json"
-    prior = json.loads(prior_path.read_text()) if prior_path.exists() else {}
-    prior.update(results)
-    prior_path.parent.mkdir(exist_ok=True)
-    prior_path.write_text(json.dumps(prior, indent=1))
-    write_modes_report(prior)
-    print(json.dumps({"metric": "bench_modes", "modes": results}))
-
-
 # queries inlined into the final stdout JSON line. The driver captures
 # only the last ~2000 chars of stdout; round 2's 63-query line
 # overflowed it and the round recorded NO parsed bench at all. The
@@ -1315,11 +1019,9 @@ def _ext_summary(ext: dict, levels: tuple) -> dict:
     if ext.get("per_core_efficiency") is not None:
         out["per_core_eff"] = ext["per_core_efficiency"]
     if ext.get("remeasure_skipped"):
-        # a reused stable window must never pose as a fresh one: the
-        # driver-visible line carries its own measurement timestamp
+        # a committed record must never pose as this run's
+        # measurement: the one-line JSON carries its timestamp
         out["cached"] = ext.get("measured_at", True)
-        if ext.get("cache_key_stale"):
-            out["stale"] = True
     return out
 
 
@@ -1327,26 +1029,10 @@ def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--scaling-worker":
         print(json.dumps(scaling_worker(int(sys.argv[2]), sys.argv[3])))
         return
-    if len(sys.argv) > 1 and sys.argv[1] == "--mode":
-        run_modes(sys.argv[2].split(",") if len(sys.argv) > 2
-                  else list(MODES))
-        return
+    # the default run is the query table plus each window's committed
+    # record (a re-measure costs ~30 min per window); `--full` also
+    # measures every window this host has the cores for
     full = len(sys.argv) > 1 and sys.argv[1] == "--full"
-    # BUDGET-AWARE DEFAULT (the round-4 lesson): the old default
-    # unconditionally re-measured every scaling window — an est.
-    # 40-70 min — and the driver killed it at timeout (rc=124),
-    # recording NO perf data at all. The bench's first duty is to
-    # ALWAYS emit its one-line JSON within the caller's budget:
-    # queries run first (they have no cache), then each scaling
-    # window is re-measured ONLY if the host has its cores and its
-    # estimated cost fits the remaining wall-clock budget — otherwise
-    # the committed stable window is reused verbatim, labeled with its
-    # own measured_at and an explicit remeasure_skipped marker.
-    # `--full` lifts the budget; SPARK_GRAFT_BENCH_BUDGET=0 refreshes
-    # only the query table. Reference analog: the benchmark harness
-    # always emits its report (its benchmark/benchmark.cpp:239-293).
-    deadline = (None if full
-                else time.monotonic() + BENCH_BUDGET)
     if os.environ.get("SPARK_GRAFT_SKIP_QUERIES") == "1":
         # iteration aid: refresh the scaling windows without paying
         # the query phase; report/detail keep the prior query table
@@ -1356,10 +1042,9 @@ def main() -> None:
     else:
         timings = run_queries()
     _finish(timings, {
-        "extraction": measure_or_reuse_window(
-            SCALING_LEVELS, deadline=deadline, required=True),
+        "extraction": measure_or_reuse_window(SCALING_LEVELS, full),
         "extraction_wide": measure_or_reuse_window(
-            WIDE_LEVELS, deadline=deadline, min_rounds=2, max_rounds=4),
+            WIDE_LEVELS, full, min_rounds=2, max_rounds=4),
         "extraction_iso": reuse_window(
             WIDE_LEVELS, "not_measurable_here", "iso"),
     })

@@ -1,13 +1,19 @@
 """bench.py reporting policy units — no Spark, no measurement.
 
-The round-2 failure modes these pin:
+Each scaling window is in one of two states: measured this run (only
+under `--full`, on a host with the hi leg's cores), or its committed
+record BENCH/stable_scaling_*.json printed verbatim with its
+`measured_at`. Only a stable measured window rewrites its record; an
+unstable one is published flagged and leaves the record as it was.
+
+The failure modes these pin:
   * a physically impossible engine headline (median efficiency above
     the host's own ceiling) passed the validity gate and REPLACED the
-    stable cache;
-  * a stale stable cache could be republished after the gate
-    tightened;
+    stable record (round 2);
   * the final stdout JSON line overflowed the driver's 2000-char tail
-    capture, recording no parsed bench at all.
+    capture, recording no parsed bench at all;
+  * a window whose hi leg needs more cores than the host has was
+    measured oversubscribed.
 """
 
 import json
@@ -72,26 +78,6 @@ class TestWindowUnstable:
             bracket_probes=[0.96, 0.84], eff_rounds=[0.21, 0.26, 0.18],
             eff=0.21, ceiling=0.96, dps=(6666.0, 6295.0))
 
-    def test_poisoned_nonmonotone_cache_never_republished(
-            self, tmp_path, monkeypatch):
-        import json as _json
-        import platform
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, tag="": tmp_path / "s.json")
-        w = TestStableWindowPolicy()._window(0.21, 0.96, unstable=False)
-        w["local[8]"]["docs_per_sec"] = 5.0  # below local[2]'s 10.0
-        key = {"corpus": "c", "levels": [2, 8],
-               "code": bench._package_code_digest(),
-               "host": platform.node(), "pinned": bench.PIN_CPUS}
-        (tmp_path / "s.json").write_text(
-            _json.dumps({"window_key": key, **w}))
-        bad = TestStableWindowPolicy()._window(0.7, 0.97, unstable=True)
-        out = bench.stable_window_policy(bad, (2, 8), "c")
-        assert out["scaling_efficiency"] == 0.7  # verbatim, no swap
-
-
 class TestStableWindowPolicy:
     LEVELS = (2, 8)
 
@@ -124,68 +110,6 @@ class TestStableWindowPolicy:
             (tmp_path / "stable_2_8.json").read_text())
         assert cached["scaling_efficiency"] == 0.95
         assert cached["window_key"]["corpus"] == "corpusA"
-
-    def test_unstable_window_substitutes_valid_cache(self, tmp_path,
-                                                     monkeypatch):
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, tag="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
-        good = self._window(0.95, 0.97, unstable=False)
-        bench.stable_window_policy(good, self.LEVELS, "corpusA")
-        bad = self._window(0.70, 0.97, unstable=True)
-        out = bench.stable_window_policy(bad, self.LEVELS, "corpusA")
-        assert out["scaling_efficiency"] == 0.95
-        assert out["unstable_current_window"]["scaling_efficiency"] == 0.70
-
-    def test_poisoned_cache_never_republished(self, tmp_path, monkeypatch):
-        # a cache written before the engine-side gate existed (eff
-        # above the host ceiling) must NOT substitute for an unstable
-        # current window — the current window is reported verbatim
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, tag="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
-        import platform
-
-        poisoned = self._window(1.0508, 0.9541, unstable=False)
-        key = {"corpus": "corpusA", "levels": list(self.LEVELS),
-               "code": bench._package_code_digest(),
-               "host": platform.node(), "pinned": bench.PIN_CPUS}
-        (tmp_path / "stable_2_8.json").write_text(
-            json.dumps({"window_key": key, **poisoned}))
-        bad = self._window(0.70, 0.97, unstable=True)
-        out = bench.stable_window_policy(bad, self.LEVELS, "corpusA")
-        assert out["scaling_efficiency"] == 0.70  # verbatim, no swap
-
-    def test_unpinned_cache_not_borrowed_for_pinned_run(
-            self, tmp_path, monkeypatch):
-        # methodology marker: a stable window measured WITHOUT cpuset
-        # pinning has a differently-borrowed lo-leg denominator and
-        # must never substitute for a pinned run (or vice versa)
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, tag="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
-        monkeypatch.setattr(bench, "PIN_CPUS", False)
-        good = self._window(0.95, 0.97, unstable=False)
-        bench.stable_window_policy(good, self.LEVELS, "corpusA")
-        monkeypatch.setattr(bench, "PIN_CPUS", True)
-        bad = self._window(0.70, 0.97, unstable=True)
-        out = bench.stable_window_policy(bad, self.LEVELS, "corpusA")
-        assert out["scaling_efficiency"] == 0.70  # verbatim, no swap
-
-    def test_cache_key_mismatch_not_borrowed(self, tmp_path, monkeypatch):
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, tag="": tmp_path / f"stable_{levels[0]}_{levels[1]}.json")
-        good = self._window(0.95, 0.97, unstable=False)
-        bench.stable_window_policy(good, self.LEVELS, "corpusA")
-        bad = self._window(0.70, 0.97, unstable=True)
-        out = bench.stable_window_policy(bad, self.LEVELS, "corpusB")
-        assert out["scaling_efficiency"] == 0.70
-
 
 class TestPerCoreAccounting:
     def test_proc_stat_busy_monotone(self):
@@ -231,13 +155,12 @@ class TestCompactLine:
 
     def test_full_compact_line_fits_tail_capture(self):
         # real worst case: every inline query at 6-char timings + all
-        # three window summaries, each reused (cached timestamp) from
-        # a stale cache key and carrying per-core efficiency
+        # three window summaries, each a committed record (cached
+        # timestamp) carrying per-core efficiency
         w = TestStableWindowPolicy()._window(0.95, 0.97, unstable=False)
         w["per_core_efficiency"] = 0.9063
         w.update(measured_at="2026-08-21T18:49:29+00:00",
-                 remeasure_skipped="not_measurable_here",
-                 cache_key_stale=True)
+                 remeasure_skipped="not_measurable_here")
         wide = dict(w)
         wide["local[32]"] = w["local[8]"]
         compact = {
@@ -252,111 +175,124 @@ class TestCompactLine:
         }
         for key in ("extraction", "extraction_wide", "extraction_iso"):
             assert compact[key]["cached"] == w["measured_at"]
-            assert compact[key]["stale"] is True
         assert len(json.dumps(compact)) < 1500
 
 
-class TestBudgetAwareDefault:
-    """The round-4 regression: the default bench re-measured all three
-    scaling windows unconditionally (est. 40-70 min) and the driver
-    killed it at timeout — recording NO perf data. The default path
-    must now always emit its one-line JSON within
-    SPARK_GRAFT_BENCH_BUDGET, reusing committed stable windows
-    (labeled) when a re-measure doesn't fit."""
+class TestTwoStates:
+    """A default run prints the committed records; `--full` measures
+    every window the host has the cores for, and only a stable one
+    rewrites its record."""
 
-    def _cache(self, tmp_path, monkeypatch, *, key_ok=True):
-        import platform
+    def _host(self, tmp_path, monkeypatch, argv=("bench.py",)):
+        import shutil
+        import sys as _sys
+        (tmp_path / "BENCH").mkdir()
+        for f in (bench.REPO / "BENCH").glob("stable_scaling_*.json"):
+            shutil.copy(f, tmp_path / "BENCH" / f.name)
         monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, tag="":
-                tmp_path / f"s{'_' + tag if tag else ''}"
-                           f"_{levels[0]}_{levels[1]}.json")
-        # the budget policy under test; the host-cores check is
-        # pinned separately (TestNotMeasurableHere)
         monkeypatch.setattr(bench.os, "cpu_count", lambda: 32)
-        w = TestStableWindowPolicy()._window(0.95, 0.97, unstable=False)
-        key = {"corpus": "c", "levels": [2, 8],
-               "code": (bench._package_code_digest() if key_ok
-                        else "stale"),
-               "host": platform.node(), "pinned": bench.PIN_CPUS}
-        (tmp_path / "s_2_8.json").write_text(json.dumps(
-            {"measured_at": "2026-08-21T02:30:35+00:00",
-             "window_key": key, **w}))
+        monkeypatch.setattr(bench, "run_queries",
+                            lambda: {"q1": 1.25, "q2": 0.75})
+        monkeypatch.setattr(bench, "ensure_corpus", lambda *a: None)
+        monkeypatch.setattr(_sys, "argv", list(argv))
+
+        def boom(*a, **k):
+            raise AssertionError("measured a window it was not asked to")
+        monkeypatch.setattr(bench, "run_scaling", boom)
+
+    def _records(self):
+        return {key: bench.stable_cache_path(
+                    levels, "iso" if key == "extraction_iso" else "")
+                for key, levels in bench.WINDOWS}
+
+    def _run(self, capsys):
+        bench.main()
+        line = capsys.readouterr().out.strip().splitlines()[-1]
+        assert len(line) <= 1900
+        detail = json.loads(
+            (bench.REPO / "BENCH" / "bench_detail.json").read_text())
+        return json.loads(line), detail
+
+    @staticmethod
+    def _window(levels, eff, unstable):
+        lo, hi = levels
+        w = TestStableWindowPolicy()._window(eff, 0.97, unstable)
+        legs = w.pop("local[2]"), w.pop("local[8]")
+        w[f"local[{lo}]"], w[f"local[{hi}]"] = legs
         return w
 
-    def test_no_budget_reuses_cache_labeled(self, tmp_path, monkeypatch):
-        self._cache(tmp_path, monkeypatch)
+    def test_default_run_prints_the_records(self, tmp_path, monkeypatch,
+                                            capsys):
+        self._host(tmp_path, monkeypatch)
+        before = {k: p.read_bytes() for k, p in self._records().items()}
+        d, detail = self._run(capsys)
+        assert d["value"] == 2.0
+        for key, path in self._records().items():
+            record = json.loads(before[key])
+            assert d[key]["cached"] == record["measured_at"]
+            assert "stale" not in d[key]
+            assert detail[key]["remeasure_skipped"] == (
+                "not_measurable_here" if key == "extraction_iso"
+                else "not_requested")
+            assert path.read_bytes() == before[key]
+
+    def test_optional_window_without_record_is_omitted(
+            self, tmp_path, monkeypatch, capsys):
+        self._host(tmp_path, monkeypatch)
+        bench.stable_cache_path((8, 32)).unlink()
+        assert bench.measure_or_reuse_window((8, 32)) is None
+        d, detail = self._run(capsys)
+        assert "extraction_wide" not in d
+        assert "extraction_wide" not in detail
+        assert d["extraction"]["cached"]
+
+    def test_full_unstable_window_is_published_verbatim(
+            self, tmp_path, monkeypatch, capsys):
+        self._host(tmp_path, monkeypatch, ("bench.py", "--full"))
+        measured = {}
+
+        def fake(corpus, levels, **k):
+            measured[levels] = self._window(levels, 0.70, unstable=True)
+            return measured[levels]
+        monkeypatch.setattr(bench, "run_scaling", fake)
+        before = {k: p.read_bytes() for k, p in self._records().items()}
+        d, detail = self._run(capsys)
+        for key, levels in (("extraction", (2, 8)),
+                            ("extraction_wide", (8, 32))):
+            assert detail[key] == measured[levels]
+            assert d[key]["unstable"] is True
+            assert d[key]["efficiency"] == 0.70
+            assert "cached" not in d[key]
+        for key, path in self._records().items():
+            assert path.read_bytes() == before[key]
+        report = (tmp_path / "BENCH" / "BASELINE.md").read_text()
+        assert report.count("Window flagged UNSTABLE") == 2
+        assert report.count("measured this run") == 2
+
+    def test_full_stable_window_rewrites_record(
+            self, tmp_path, monkeypatch, capsys):
+        self._host(tmp_path, monkeypatch, ("bench.py", "--full"))
         monkeypatch.setattr(
             bench, "run_scaling",
-            lambda *a, **k: (_ for _ in ()).throw(
-                AssertionError("re-measured over budget")))
-        import time as _t
-        out = bench.measure_or_reuse_window(
-            (2, 8), deadline=_t.monotonic() + 5.0, required=True)
-        assert out["remeasure_skipped"] == "budget"
-        assert out["measured_at"] == "2026-08-21T02:30:35+00:00"
-        assert "cache_key_stale" not in out
-        s = bench._ext_summary(out, (2, 8))
-        assert s["cached"] == "2026-08-21T02:30:35+00:00"
-
-    def test_stale_code_cache_is_flagged(self, tmp_path, monkeypatch):
-        self._cache(tmp_path, monkeypatch, key_ok=False)
-        import time as _t
-        out = bench.measure_or_reuse_window(
-            (2, 8), deadline=_t.monotonic() + 5.0, required=True)
-        assert out["cache_key_stale"] is True
-        assert bench._ext_summary(out, (2, 8))["stale"] is True
-
-    def test_fitting_budget_measures_fresh(self, tmp_path, monkeypatch):
-        self._cache(tmp_path, monkeypatch)
-        fresh = TestStableWindowPolicy()._window(0.9, 0.95,
-                                                unstable=False)
-        monkeypatch.setattr(bench, "ensure_corpus", lambda *a: None)
-        monkeypatch.setattr(bench, "run_scaling",
-                            lambda *a, **k: fresh)
-        out = bench.measure_or_reuse_window((2, 8), deadline=None,
-                                            required=True)
-        assert out["scaling_efficiency"] == 0.9
-        assert "remeasure_skipped" not in out
-
-    def test_optional_window_without_cache_is_omitted(
-            self, tmp_path, monkeypatch):
-        self._cache(tmp_path, monkeypatch)  # only the 2_8 cache exists
-        import time as _t
-        out = bench.measure_or_reuse_window(
-            (8, 32), deadline=_t.monotonic() + 5.0, required=False)
-        assert out is None
-
-    def test_required_window_without_cache_measures_over_budget(
-            self, tmp_path, monkeypatch):
-        monkeypatch.setattr(bench, "REPO", tmp_path)
-        monkeypatch.setattr(bench.os, "cpu_count", lambda: 32)
-        monkeypatch.setattr(
-            bench, "stable_cache_path",
-            lambda levels, tag="": tmp_path / "absent.json")
-        fresh = TestStableWindowPolicy()._window(0.9, 0.95,
-                                                unstable=False)
-        monkeypatch.setattr(bench, "ensure_corpus", lambda *a: None)
-        monkeypatch.setattr(bench, "run_scaling",
-                            lambda *a, **k: fresh)
-        import time as _t
-        out = bench.measure_or_reuse_window(
-            (2, 8), deadline=_t.monotonic() - 1.0, required=True)
-        assert out["scaling_efficiency"] == 0.9
-
-    def test_default_estimates_exceed_default_budget_when_cached(self):
-        # the concrete r5 contract: with the committed stable windows
-        # on this VM, NO window re-measure fits the default 480 s
-        # budget once queries have run — the default driver run is
-        # queries + cached windows, well under its timeout
-        for levels, mr in [((2, 8), 3), ((8, 32), 2)]:
-            assert bench._window_cost_estimate(levels, mr) > 300
+            lambda corpus, levels, **k: self._window(levels, 0.9,
+                                                     unstable=False))
+        iso = self._records()["extraction_iso"]
+        iso_before = iso.read_bytes()
+        d, detail = self._run(capsys)
+        for key, levels in (("extraction", (2, 8)),
+                            ("extraction_wide", (8, 32))):
+            assert d[key]["efficiency"] == 0.9
+            assert "remeasure_skipped" not in detail[key]
+            record = json.loads(bench.stable_cache_path(levels).read_text())
+            assert record["scaling_efficiency"] == 0.9
+            assert record["window_key"]["levels"] == list(levels)
+            assert record["measured_at"]
+        assert iso.read_bytes() == iso_before
 
 
 class TestDeadlineCappedRounds:
-    """VERDICT r4 ask #4: window extension rounds are capped by
-    wall-clock budget, not only by round count."""
+    """Noise-triggered extension rounds run up to max_rounds and no
+    further."""
 
     def _fake_workers(self, walls={"n": 0}):
         # alternating throughput so the matched-pair ratio spread
@@ -392,18 +328,6 @@ class TestDeadlineCappedRounds:
         out = bench.run_scaling("/nonexistent", (2, 8), min_rounds=2,
                                 max_rounds=4)
         assert len(out["efficiency_per_round"]) == 4  # extended
-
-    def test_noisy_window_respects_deadline(self, monkeypatch):
-        import time as _t
-        self._quiet_probes(monkeypatch)
-        self._patch_workers(monkeypatch)
-        out = bench.run_scaling("/nonexistent", (2, 8), min_rounds=2,
-                                max_rounds=4,
-                                deadline=_t.monotonic() + 0.5)
-        # min_rounds always run; extensions don't fit a 0.5 s budget
-        # against the 12 s estimated round cost
-        assert len(out["efficiency_per_round"]) == 2
-        assert out["host_window_unstable"]  # spread published as-is
 
 
 class TestLegTimeout:
@@ -492,7 +416,7 @@ class TestNotMeasurableHere:
         self._no_measure(monkeypatch)
         committed = json.loads(
             bench.stable_cache_path((8, 32)).read_text())
-        out = bench.measure_or_reuse_window((8, 32), deadline=None)
+        out = bench.measure_or_reuse_window((8, 32), full=True)
         assert out["remeasure_skipped"] == "not_measurable_here"
         assert out["measured_at"] == committed["measured_at"]
         assert out["scaling_efficiency"] == committed["scaling_efficiency"]
@@ -546,5 +470,52 @@ class TestKnobs:
                     and isinstance(arg.value, str) \
                     and arg.value.startswith("SPARK_GRAFT_"):
                 read.add(arg.value[len("SPARK_GRAFT_"):])
-        assert read == {"PIN", "SF_DIR", "CPUS", "BENCH_BUDGET",
-                        "SCALE_DOCS", "CORPUS_CACHE", "SKIP_QUERIES"}
+        assert read == {"SF_DIR", "CPUS", "SCALE_DOCS", "CORPUS_CACHE",
+                        "SKIP_QUERIES"}
+
+
+class TestPinning:
+    def _cmd(self, mod, monkeypatch):
+        import subprocess as _sp
+        seen = []
+
+        def fake_run(cmd, **kw):
+            seen.append(cmd)
+            leg = {"cores": 2, "wall_sec": 1.0, "docs": 1,
+                   "docs_per_sec": 1.0}
+            return _sp.CompletedProcess(cmd, 0, json.dumps(leg), "")
+        monkeypatch.setattr(mod.subprocess, "run", fake_run)
+        monkeypatch.setattr(mod.os, "cpu_count", lambda: 32)
+        mod._run_worker(2, "/nonexistent", 10.0)
+        return seen[0]
+
+    def test_legs_pin_when_taskset_exists(self, monkeypatch):
+        monkeypatch.setattr(bench, "PIN_CPUS", True)
+        cmd = self._cmd(bench, monkeypatch)
+        assert cmd[:3] == ["taskset", "-c", "0-1"]
+
+    def test_no_taskset_means_no_prefix(self, monkeypatch):
+        # PIN_CPUS is decided once, at import, from what the host has
+        import importlib.util
+        import shutil
+        monkeypatch.setattr(shutil, "which", lambda name: None)
+        spec = importlib.util.spec_from_file_location(
+            "bench_without_taskset", bench.REPO / "bench.py")
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        assert mod.PIN_CPUS is False
+        cmd = self._cmd(mod, monkeypatch)
+        assert "taskset" not in cmd
+        assert cmd[1:3] == [str(bench.REPO / "bench.py"), "--scaling-worker"]
+
+
+class TestCommittedRecords:
+    def test_each_record_parses_with_measured_at_and_legs(self):
+        # a default run's JSON line rests on these files alone
+        for key, levels in bench.WINDOWS:
+            tag = "iso" if key == "extraction_iso" else ""
+            record = json.loads(
+                bench.stable_cache_path(levels, tag).read_text())
+            assert record["measured_at"]
+            for n in levels:
+                assert record[f"local[{n}]"]["docs_per_sec"] > 0
